@@ -81,7 +81,12 @@ def _sweep_orphans(path: str) -> None:
     whole tree, not the top-level dir whose mtime Spark only touches at
     job start and commit), and pid REUSE (the orphan's pid number now
     names an unrelated live process, so the 24 h catch-all reclaims it
-    regardless).  The tiny `.lock` files persist by design — unlinking a
+    regardless).  Clock skew: a future-dated mtime anywhere in the tree
+    reads as "just touched" (quiet age clamped to >= 0) and so holds off
+    the dead-pid rule, but the 24 h catch-all judges only the top-level
+    dir's own age — the older of its mtime and ctime, which utime() cannot
+    move into the future — so no skewed file can make an orphan immortal.
+    The tiny `.lock` files persist by design — unlinking a
     file others may flock() races a third opener onto a different inode,
     silently splitting the lock."""
     import time
@@ -89,9 +94,10 @@ def _sweep_orphans(path: str) -> None:
     now = time.time()
     for d in glob.glob(f"{path}.tmp.*") + glob.glob(f"{path}.stale.*"):
         try:
-            newest = os.stat(d).st_mtime
+            st = os.stat(d)
         except OSError:
             continue  # concurrently removed
+        newest = st.st_mtime
         for root, dirs, files in os.walk(d):
             for name in dirs + files:
                 try:
@@ -99,10 +105,12 @@ def _sweep_orphans(path: str) -> None:
                 except OSError:
                     continue  # concurrently renamed/removed
                 newest = max(newest, t)
-        age = now - newest
+        quiet = max(0.0, now - newest)
+        own_age = now - min(st.st_mtime, st.st_ctime)
         pid = d.rsplit(".", 1)[-1]
         pid_dead = not (pid.isdigit() and os.path.exists(f"/proc/{pid}"))
-        if (pid_dead and age > _SWEEP_DEAD_PID_AGE_S) or age > _SWEEP_ANY_AGE_S:
+        if ((pid_dead and quiet > _SWEEP_DEAD_PID_AGE_S)
+                or own_age > _SWEEP_ANY_AGE_S):
             shutil.rmtree(d, ignore_errors=True)
 
 

@@ -7,14 +7,34 @@ resumability around the expensive stage:
   Stage A (heavy, resumable per part_id): the fused scoring UDF pass —
      decode + scrub + LID + PPL + simhash.  Processed in waves of
      part_ids; each wave is written with dynamic partition overwrite
-     (idempotent) and then recorded in a `_state` parquet.  A re-run
-     skips committed partitions; a partially-written wave whose state row
-     never landed is simply overwritten (write-then-commit order).
+     (idempotent) and then recorded in a `_state` parquet as one
+     `scored` row per part_id.  A re-run skips committed partitions; a
+     partially-written wave whose state row never landed is simply
+     overwritten (write-then-commit order).
   Stage B (cheap, global, idempotent): dup flags need GLOBAL hash groups
      (duplicates cross partitions), so they run over the full scored
      table — but only over ~100-byte rows (checksums + simhash), never
      the audio payload.  Decision + labels + lineage_metrics are then a
-     full overwrite, safe to repeat.
+     full overwrite, safe to repeat.  Once the lineage write has
+     finished, Stage B appends one `labeled` row per committed part_id
+     to the same `_state` log (the same write-then-commit order).
+
+A resume skips Stage B — and returns readers over the committed labels/
+and lineage/ — exactly when, at the current rule_version:
+  1. no part_id of the input is left to score, and
+  2. every committed part_id has at least as many `labeled` rows as
+     `scored` rows, and
+  3. labels/ and lineage/ both exist.
+This is sound because Stage B is a pure function of scored/ plus
+rule_version, and scored/ only changes through Stage A writes that are
+each followed by a `scored` row.  A resume never rewrites a committed
+part (it is immutable to Stage A), so any Stage A write after the last
+completed Stage B — a `resume=False` re-run, even an interrupted one —
+leaves that part with more `scored` than `labeled` rows, and the next
+resume runs Stage B again.  A Stage B that died before its `labeled`
+append leaves the counts short the same way.  Like the Stage A skip, the
+rule assumes a committed part_id's input clips do not change between runs
+at one rule_version.
 
 State rows carry config.rule_version(), which hashes the thresholds AND
 the label-determining source bytes (config.label_code_version) AND the
@@ -22,15 +42,22 @@ scored-schema field names: changing any threshold, any scoring/decision
 code, or the fused UDF's output schema invalidates every checkpoint
 automatically — a resume can never mix label semantics or read a
 mixed-schema scored/ dir.
+
+Every re-read declares its schema (STATE_SCHEMA, scoring.SCORED_SCHEMA,
+schema.LABELS_SCHEMA, schema.LINEAGE_SCHEMA), so none pays a schema-
+inference job and part_id comes back as int without a cast.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import config
+from . import config, schema
 from .operators import decision, dedup, heuristics, scoring
 
 STATE_SCHEMA = T.StructType([
@@ -44,21 +71,46 @@ def _state_path(output_path: str) -> str:
     return f"{output_path}/_state"
 
 
-def committed_parts(spark: SparkSession, output_path: str) -> set[int]:
+def _commit_counts(spark: SparkSession,
+                   output_path: str) -> tuple[Counter, Counter]:
+    """(scored, labeled) commit-row counts per part_id at the current
+    rule_version, from one read of the `_state` log.  A log that does not
+    exist yet is empty; any other read failure (a corrupt file) raises
+    rather than passing for an empty log and rescoring everything."""
     try:
-        st = spark.read.parquet(_state_path(output_path))
-    except Exception:
-        return set()
-    rows = (st.where((F.col("stage") == "scored")
-                     & (F.col("rule_version") == config.rule_version()))
-            .select("part_id").distinct().collect())
-    return {r.part_id for r in rows}
+        st = spark.read.schema(STATE_SCHEMA).parquet(_state_path(output_path))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return Counter(), Counter()
+    rows = (st.where(F.col("rule_version") == config.rule_version())
+            .select("part_id", "stage").collect())
+    return (Counter(r.part_id for r in rows if r.stage == "scored"),
+            Counter(r.part_id for r in rows if r.stage == "labeled"))
 
 
-def _mark_committed(spark: SparkSession, output_path: str, parts: list[int]) -> None:
-    rows = [(int(p), "scored", config.rule_version()) for p in parts]
+def committed_parts(spark: SparkSession, output_path: str) -> set[int]:
+    return set(_commit_counts(spark, output_path)[0])
+
+
+def _mark_committed(spark: SparkSession, output_path: str, parts: list[int],
+                    stage: str = "scored") -> None:
+    rows = [(int(p), stage, config.rule_version()) for p in parts]
     spark.createDataFrame(rows, STATE_SCHEMA) \
         .coalesce(1).write.mode("append").parquet(_state_path(output_path))
+
+
+def _read_labels(spark: SparkSession, output_path: str) -> DataFrame:
+    return spark.read.schema(schema.LABELS_SCHEMA).parquet(f"{output_path}/labels")
+
+
+def _read_outputs(spark: SparkSession,
+                  output_path: str) -> tuple[DataFrame, DataFrame]:
+    """(labels, lineage_metrics) readers over the committed output; raises
+    AnalysisException PATH_NOT_FOUND when either directory is missing."""
+    return (_read_labels(spark, output_path),
+            spark.read.schema(schema.LINEAGE_SCHEMA)
+            .parquet(f"{output_path}/lineage"))
 
 
 def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
@@ -73,10 +125,21 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
 
     all_parts = sorted(r.part_id for r in
                        clips.select("part_id").distinct().collect())
-    done = committed_parts(spark, output_path) if resume else set()
+    n_scored, n_labeled = (_commit_counts(spark, output_path) if resume
+                           else (Counter(), Counter()))
+    done = set(n_scored)
     todo = [p for p in all_parts if p not in done]
     if done:
         log(f"resume: {len(done)} partitions already scored, {len(todo)} to go")
+        if not todo and all(n_labeled[p] >= n for p, n in n_scored.items()):
+            try:
+                outputs = _read_outputs(spark, output_path)
+            except AnalysisException as e:
+                if e.getCondition() != "PATH_NOT_FOUND":
+                    raise
+            else:
+                log("resume: labels and lineage up to date, Stage B skipped")
+                return outputs
 
     # ---- Stage A: heavy UDF pass, wave by wave ---------------------------
     for i in range(0, len(todo), wave_size):
@@ -89,8 +152,7 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
         log(f"scored wave {i // wave_size + 1}: partitions {wave[0]}..{wave[-1]}")
 
     # ---- Stage B: global dup flags + decision (cheap, idempotent) --------
-    scored_all = spark.read.parquet(scored_path) \
-        .withColumn("part_id", F.col("part_id").cast("int"))
+    scored_all = spark.read.schema(scoring.SCORED_SCHEMA).parquet(scored_path)
     # repair is fused into the Stage-A scoring UDF (scored rows already
     # carry the repaired transcript + `repaired`), so Stage B is all-native
     flagged = heuristics.with_model_flags(heuristics.with_heuristic_flags(scored_all))
@@ -100,9 +162,8 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
      .write.mode("overwrite").partitionBy("part_id")
      .parquet(f"{output_path}/labels"))
 
-    labels_out = spark.read.parquet(f"{output_path}/labels") \
-        .withColumn("part_id", F.col("part_id").cast("int"))
-    metrics = decision.lineage_metrics(labels_out)
+    metrics = decision.lineage_metrics(_read_labels(spark, output_path))
     metrics.coalesce(1).write.mode("overwrite").parquet(f"{output_path}/lineage")
+    _mark_committed(spark, output_path, sorted(done.union(todo)), "labeled")
 
-    return labels_out, spark.read.parquet(f"{output_path}/lineage")
+    return _read_outputs(spark, output_path)

@@ -10,7 +10,12 @@ Output layout:
     out/scored/part_id=*/    per-partition checkpoint of the heavy stage
     out/labels/part_id=*/    final keep/drop + scrub labels
     out/lineage/             per-partition metrics (FIXTURES.md Table 3)
-    out/_state/              commit log (part_id, stage, rule_version)
+    out/_state/              commit log (part_id, stage, rule_version);
+                             stage is `scored` (a Stage A wave landed) or
+                             `labeled` (Stage B finished over it).  A
+                             resume with nothing new scored since the last
+                             `labeled` rows re-reads labels/ and lineage/
+                             instead of rebuilding them.
 """
 
 from __future__ import annotations
@@ -42,8 +47,9 @@ def main() -> int:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
-    from engine import config, lineage, sources
+    from engine import config, lineage, schema, sources
     from engine.operators import pipeline
 
     spark = (SparkSession.builder.appName("clip-quality-pipeline")
@@ -62,20 +68,22 @@ def main() -> int:
          .partitionBy("part_id").parquet(f"{args.output}/labels"))
         metrics.coalesce(1).write.mode("overwrite") \
             .parquet(f"{args.output}/lineage")
-        labels = spark.read.parquet(f"{args.output}/labels")
-        metrics = spark.read.parquet(f"{args.output}/lineage")
+        metrics = spark.read.schema(schema.LINEAGE_SCHEMA) \
+            .parquet(f"{args.output}/lineage")
     else:
-        labels, metrics = lineage.run_checkpointed(
+        _, metrics = lineage.run_checkpointed(
             spark, clips, args.output,
             wave_size=args.wave_size, resume=not args.no_resume)
 
-    n_total = labels.count()
-    summary = metrics.groupBy().agg(
-        {"n_kept": "sum", "n_dropped": "sum", "n_scrubbed": "sum"}).collect()[0]
+    # one aggregate over the small lineage table: no summary-only pass
+    # over labels/
+    summary = metrics.agg(*(F.sum(c).alias(c) for c in (
+        "n_total", "n_kept", "n_dropped", "n_scrubbed"))).collect()[0]
+    n_total = summary["n_total"] or 0
     dt = time.time() - t0
     print(f"pipeline done in {dt:.1f}s: {n_total} clips, "
-          f"kept={summary['sum(n_kept)']} dropped={summary['sum(n_dropped)']} "
-          f"scrubbed={summary['sum(n_scrubbed)']} "
+          f"kept={summary['n_kept']} dropped={summary['n_dropped']} "
+          f"scrubbed={summary['n_scrubbed']} "
           f"({n_total / dt:.0f} clips/sec) rule_version={config.rule_version()}")
     spark.stop()
     return 0

@@ -301,6 +301,36 @@ def test_materialize_sweeps_aged_orphans(tmp_path):
     assert os.path.exists(f"{target}/_SUCCESS")
 
 
+def test_sweep_future_mtime_cannot_make_orphan_immortal(tmp_path, monkeypatch):
+    """Clock skew: a future-dated mtime inside an orphan, or
+    on the orphan dir itself, used to pin the quiet age negative forever.
+    The 24 h catch-all now judges the top-level dir's own age, so both
+    orphans are reclaimed once it has passed."""
+    import os
+    import time
+
+    target = str(tmp_path / "mat_skew")
+    now = time.time()
+    year = 365 * 24 * 3600
+    nested = f"{target}.tmp.999999999"  # dead pid, future-dated file inside
+    os.makedirs(os.path.join(nested, "_temporary"))
+    skewed = os.path.join(nested, "_temporary", "part-00000")
+    open(skewed, "w").write("x")
+    os.utime(skewed, (now + year, now + year))
+    os.utime(nested, (now - 25 * 3600, now - 25 * 3600))
+    top = f"{target}.stale.999999998"  # the orphan dir itself future-dated
+    os.makedirs(top)
+    os.utime(top, (now + year, now + year))
+
+    entrymod._sweep_orphans(target)
+    assert not os.path.exists(nested)
+    assert os.path.exists(top)  # its own age is ~0 today
+
+    monkeypatch.setattr(time, "time", lambda: now + 25 * 3600)
+    entrymod._sweep_orphans(target)
+    assert not os.path.exists(top)
+
+
 def test_materialize_concurrent_publishers_one_winner(tmp_path):
     """N processes racing to materialize the same path (the bench.py-vs-
     pytest scenario from round-3 ADVICE): every process must end up with

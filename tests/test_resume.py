@@ -1,22 +1,62 @@
 """Checkpoint/resume convergence (SURVEY §5.2-5): interrupt after k of m
-waves -> rerun -> identical final labels, no double-processing."""
+waves -> rerun -> identical final labels, no double-processing; a re-run
+on a committed output is a no-op unless something was scored since."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from engine import config, lineage
-from engine.operators import pipeline, scoring
+from engine.operators import dedup, pipeline, scoring
 
 
-def test_partial_then_resume_identical(spark, clips_t1, tmp_path):
+def _frames(labels, metrics) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Order-free pandas views of (labels, lineage_metrics)."""
+    a = labels.toPandas().sort_values("clip_id").reset_index(drop=True)
+    m = metrics.toPandas().sort_values("part_id").reset_index(drop=True)
+    # collect_list builds the map: entry order is not part of the contract
+    m["drop_reason_counts"] = m["drop_reason_counts"].map(
+        lambda x: sorted(dict(x).items()))
+    return a, m
+
+
+@pytest.fixture(scope="module")
+def committed(spark, clips_t1, tmp_path_factory):
+    """One uninterrupted run: (output dir, clips, labels, lineage)."""
     path, _, _ = clips_t1
     clips = pipeline.read_clips(spark, path)
+    out = str(tmp_path_factory.mktemp("resume") / "full")
+    labels, metrics = lineage.run_checkpointed(spark, clips, out, wave_size=64)
+    return (out, clips, *_frames(labels, metrics))
 
-    # uninterrupted reference run
-    out_a = str(tmp_path / "full")
-    labels_a, _ = lineage.run_checkpointed(spark, clips, out_a, wave_size=64)
+
+def _copy(committed, tmp_path) -> str:
+    out = str(tmp_path / "out")
+    shutil.copytree(committed[0], out)
+    return out
+
+
+def _count_stage_b(monkeypatch) -> list:
+    calls = []
+    real = dedup.with_dup_flags
+    monkeypatch.setattr(dedup, "with_dup_flags",
+                        lambda df: calls.append(1) or real(df))
+    return calls
+
+
+def _forbid_stage_b(monkeypatch) -> None:
+    def boom(df):
+        raise AssertionError("Stage B ran on an up-to-date output")
+    monkeypatch.setattr(dedup, "with_dup_flags", boom)
+
+
+def test_partial_then_resume_identical(spark, committed, tmp_path):
+    _, clips, labels_a, _ = committed
 
     # simulate an interrupted run: stage A committed for only the first wave
     out_b = str(tmp_path / "partial")
@@ -36,9 +76,56 @@ def test_partial_then_resume_identical(spark, clips_t1, tmp_path):
         spark, clips, out_b, wave_size=64, log=seen.append)
     assert any("48 to go" in s for s in seen), seen
 
-    a = labels_a.toPandas().sort_values("clip_id").reset_index(drop=True)
-    b = labels_b.toPandas().sort_values("clip_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(labels_a, _frames(labels_b, metrics_b)[0])
+
+
+def test_rerun_on_committed_output_skips_stage_b(spark, committed, tmp_path,
+                                                  monkeypatch):
+    _, clips, labels_a, metrics_a = committed
+    out = _copy(committed, tmp_path)
+    _forbid_stage_b(monkeypatch)
+    seen = []
+    labels, metrics = lineage.run_checkpointed(spark, clips, out,
+                                               wave_size=64, log=seen.append)
+    assert any("Stage B skipped" in s for s in seen), seen
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
+
+
+def test_scored_commit_after_last_labeled_reruns_stage_b(
+        spark, committed, tmp_path, monkeypatch):
+    """An interrupted resume=False re-run rewrote (and committed) parts
+    0..1 but died before its Stage B: those parts now carry more `scored`
+    than `labeled` rows, so the next resume must label again."""
+    _, clips, labels_a, metrics_a = committed
+    out = _copy(committed, tmp_path)
+    lineage._mark_committed(spark, out, [0, 1])
+    calls = _count_stage_b(monkeypatch)
+    labels, metrics = lineage.run_checkpointed(spark, clips, out, wave_size=64)
+    assert calls
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
+
+    # that Stage B recorded itself: the next resume is a no-op again
+    _forbid_stage_b(monkeypatch)
+    lineage.run_checkpointed(spark, clips, out, wave_size=64)
+
+
+@pytest.mark.parametrize("gone", ["labels", "lineage"])
+def test_missing_output_dir_reruns_stage_b(spark, committed, tmp_path,
+                                           monkeypatch, gone):
+    _, clips, labels_a, metrics_a = committed
+    out = _copy(committed, tmp_path)
+    shutil.rmtree(os.path.join(out, gone))
+    calls = _count_stage_b(monkeypatch)
+    labels, metrics = lineage.run_checkpointed(spark, clips, out, wave_size=64)
+    assert calls
+    assert os.path.isdir(os.path.join(out, gone))
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
 
 
 def test_rule_version_change_invalidates(spark, clips_t1, tmp_path, monkeypatch):
@@ -48,3 +135,50 @@ def test_rule_version_change_invalidates(spark, clips_t1, tmp_path, monkeypatch)
     assert lineage.committed_parts(spark, out) == {0, 1, 2}
     monkeypatch.setattr(config, "rule_version", lambda: "different!")
     assert lineage.committed_parts(spark, out) == set()
+
+
+def test_rule_version_change_rescores_everything(spark, committed, tmp_path,
+                                                 monkeypatch):
+    """Committed `scored` and `labeled` rows of another rule_version count
+    for nothing: the resume rescores every part instead of skipping."""
+    _, clips, _, _ = committed
+    out = _copy(committed, tmp_path)
+    monkeypatch.setattr(config, "rule_version", lambda: "different!")
+
+    class Rescoring(Exception):
+        pass
+
+    rescored = []
+
+    def record(wave_df):
+        rescored.extend(r.part_id for r in
+                        wave_df.select("part_id").distinct().collect())
+        raise Rescoring
+
+    monkeypatch.setattr(scoring, "score_clips", record)
+    with pytest.raises(Rescoring):
+        lineage.run_checkpointed(spark, clips, out, wave_size=64)
+    assert sorted(rescored) == list(range(64))
+
+
+def test_corrupt_state_raises_instead_of_rescoring(spark, committed, tmp_path,
+                                                   monkeypatch):
+    _, clips, _, _ = committed
+    out = _copy(committed, tmp_path)
+    state = os.path.join(out, "_state")
+    for name in os.listdir(state):
+        path = os.path.join(state, name)
+        if name.endswith(".crc"):
+            os.remove(path)
+        elif name.endswith(".parquet"):
+            with open(path, "wb") as f:
+                f.write(b"not a parquet file")
+
+    def rescore(wave_df):
+        raise AssertionError("a corrupt commit log read as an empty one")
+
+    monkeypatch.setattr(scoring, "score_clips", rescore)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        lineage.committed_parts(spark, out)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        lineage.run_checkpointed(spark, clips, out, wave_size=64)
