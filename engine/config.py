@@ -64,8 +64,11 @@ CODEC_ALLOWLIST = ("pcm_s16le", "flac", "opus", "mp3", "mulaw", "alaw",
 
 
 def canon_codec(codec) -> str | None:
-    """Python-side mirror of heuristics.canon_codec_col (for the scoring
-    UDF, which must pick a decoder before the JVM-side recode runs)."""
+    """The engine's only codec canonicalization: str.strip() (every Unicode
+    whitespace, not just ASCII spaces), lowercase, alias -> canonical.  The
+    scoring UDF calls it once per row to pick the decoder and emits the
+    result as the `canon_codec` column CODEC_INVALID reads, so the decoder
+    and the rule always see the same codec."""
     if not isinstance(codec, str):
         return None
     lowered = codec.strip().lower()

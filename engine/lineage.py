@@ -7,10 +7,13 @@ resumability around the expensive stage:
   Stage A (heavy, resumable per part_id): the fused scoring UDF pass —
      decode + scrub + LID + PPL + simhash.  Processed in waves of
      part_ids; each wave is written with dynamic partition overwrite
-     (idempotent) and then recorded in a `_state` parquet as one
-     `scored` row per part_id.  A re-run skips committed partitions; a
-     partially-written wave whose state row never landed is simply
-     overwritten (write-then-commit order).
+     (idempotent) straight from the scan, with no reshuffle (the scan is
+     already split along the part_id files), and then recorded in a
+     `_state` parquet as one `scored` row per part_id.  Commit rows are
+     built in the JVM (spark.range + explode of literals), so recording a
+     commit never starts a Python worker.  A re-run skips committed
+     partitions; a partially-written wave whose state row never landed
+     is simply overwritten (write-then-commit order).
   Stage B (cheap, global, idempotent): dup flags need GLOBAL hash groups
      (duplicates cross partitions), so they run over the full scored
      table — but only over ~100-byte rows (checksums + simhash), never
@@ -95,9 +98,15 @@ def committed_parts(spark: SparkSession, output_path: str) -> set[int]:
 
 def _mark_committed(spark: SparkSession, output_path: str, parts: list[int],
                     stage: str = "scored") -> None:
-    rows = [(int(p), stage, config.rule_version()) for p in parts]
-    spark.createDataFrame(rows, STATE_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(_state_path(output_path))
+    # rows built in the JVM: createDataFrame over a Python list
+    # parallelizes pickled rows, which starts a second Python worker
+    # daemon just to write a few ints
+    part_ids = F.array(*(F.lit(int(p)) for p in parts)).cast("array<int>")
+    (spark.range(1, numPartitions=1)
+     .select(F.explode(part_ids).alias("part_id"),
+             F.lit(stage).alias("stage"),
+             F.lit(config.rule_version()).alias("rule_version"))
+     .write.mode("append").parquet(_state_path(output_path)))
 
 
 def _read_labels(spark: SparkSession, output_path: str) -> DataFrame:
@@ -145,8 +154,9 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
     for i in range(0, len(todo), wave_size):
         wave = todo[i:i + wave_size]
         wave_df = clips.where(F.col("part_id").isin([int(p) for p in wave]))
-        scored = scoring.score_clips(wave_df)
-        (scored.repartition("part_id")
+        # no repartition: the scan is already split along the part_id
+        # files, so an exchange would only add a job per wave
+        (scoring.score_clips(wave_df)
          .write.mode("overwrite").partitionBy("part_id").parquet(scored_path))
         _mark_committed(spark, output_path, wave)
         log(f"scored wave {i // wave_size + 1}: partitions {wave[0]}..{wave[-1]}")

@@ -42,28 +42,23 @@ def to_labels(df: DataFrame) -> DataFrame:
 def lineage_metrics(labels: DataFrame) -> DataFrame:
     """Per-partition lineage/metrics rows (FIXTURES.md Table 3) — graft of
     the per-user issue counts of Step6-Evaluation.R:7-39 at the engine's
-    checkpoint granularity."""
-    per_reason = (labels
-                  .where(~F.col("keep"))
-                  .groupBy("part_id", "drop_reason").count())
-    reason_maps = (per_reason
-                   .groupBy("part_id")
-                   .agg(F.map_from_entries(
-                       F.collect_list(F.struct("drop_reason", "count"))
-                   ).alias("drop_reason_counts")))
-    base = (labels.groupBy("part_id").agg(
+    checkpoint granularity.  One aggregation: every rule's drop count is
+    summed as its own `_n_<RULE>` column, then folded into a map that keeps
+    only the reasons that occurred (empty for a part with no drops)."""
+    agg = labels.groupBy("part_id").agg(
         F.count("*").alias("n_total"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
         F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
         F.sum((F.col("n_scrub_hits") > 0).cast("long")).alias("n_scrubbed"),
         F.sum(F.col("repaired").cast("long")).alias("n_repaired"),
-    ))
-    return (base.join(reason_maps, "part_id", "left")
-            .withColumn("drop_reason_counts",
-                        F.coalesce(F.col("drop_reason_counts"),
-                                   F.map_from_arrays(F.array(), F.array())))
-            .withColumn("status", F.lit("committed"))
-            .withColumn("rule_version", F.lit(config.rule_version()))
-            .select("part_id", "status", "n_total", "n_kept", "n_dropped",
-                    "drop_reason_counts", "n_scrubbed", "n_repaired",
-                    "rule_version"))
+        *(F.count_if(F.col("drop_reason") == r).alias(f"_n_{r}")
+          for r in config.RULE_ORDER))
+    reason_counts = F.map_filter(
+        F.map_from_arrays(
+            F.array(*(F.lit(r) for r in config.RULE_ORDER)),
+            F.array(*(F.col(f"_n_{r}") for r in config.RULE_ORDER))),
+        lambda _, n: n > 0)
+    return agg.select(
+        "part_id", F.lit("committed").alias("status"), "n_total", "n_kept",
+        "n_dropped", reason_counts.alias("drop_reason_counts"), "n_scrubbed",
+        "n_repaired", F.lit(config.rule_version()).alias("rule_version"))

@@ -28,9 +28,9 @@ key, NULL (payload missing/undecodable), is salted so it spreads instead
 of landing on a single reducer.  The band join is the only
 potentially-skewed shuffle in the engine: band values of near-empty
 transcripts collapse to few buckets, so rows whose scrubbed transcript is
-empty (simhash == 0) are excluded (they die at TXT_EMPTY anyway), and AQE
-skew-join handles residual hot bands.  At 10^12 rows one would additionally
-cap bucket width; noted in SURVEY §7.
+empty (simhash == 0) are excluded (they die at TXT_EMPTY anyway), band
+buckets wider than config.SIMHASH_BUCKET_CAP are skipped, and AQE skew-join
+handles residual hot bands (SURVEY §7).
 """
 
 from __future__ import annotations

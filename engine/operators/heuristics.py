@@ -11,22 +11,10 @@ definitions independently.
 
 from __future__ import annotations
 
-from itertools import chain
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
-
-
-def canon_codec_col(codec: Column) -> Column:
-    """lower/trim + alias->canonical map (graft of the 16-way subtype recode
-    chain HOME->HO ... OTHER->OA/OT, Step1-Read-Data-Formatting.R:76-93)."""
-    lowered = F.lower(F.trim(codec))
-    alias_map = F.create_map(
-        *chain.from_iterable((F.lit(k), F.lit(v))
-                             for k, v in config.CODEC_ALIASES.items()))
-    return F.coalesce(F.element_at(alias_map, lowered), lowered)
 
 
 def alpha_ratio_col(t: Column) -> Column:
@@ -47,12 +35,11 @@ def chars_per_sec_col(t: Column, dur: Column) -> Column:
 
 
 def with_heuristic_flags(df: DataFrame) -> DataFrame:
-    """Adds canon_codec, alpha_ratio, chars_per_sec and one boolean flag
-    column per heuristic rule (f_DUR_BOUNDS, ...)."""
+    """Adds alpha_ratio, chars_per_sec and one boolean flag column per
+    heuristic rule (f_DUR_BOUNDS, ...) to scored rows, which carry the
+    scoring UDF's `canon_codec` (config.canon_codec)."""
     t = F.col("transcript")
     dur = F.col("dur_ms")
-
-    df = df.withColumn("canon_codec", canon_codec_col(F.col("codec")))
 
     n_chars = F.length(t)
     alpha_ratio = alpha_ratio_col(t)
@@ -66,7 +53,9 @@ def with_heuristic_flags(df: DataFrame) -> DataFrame:
     # SR_INVALID: allowlist membership (domain checks, Step1:76-93)
     f_sr = ~F.col("sr_hz").isin(*config.SR_ALLOWLIST) | F.col("sr_hz").isNull()
 
-    # CODEC_INVALID: canonicalized allowlist membership
+    # CODEC_INVALID: allowlist membership of the codec the UDF decoded
+    # with (graft of the 16-way subtype recode chain HOME->HO ...
+    # OTHER->OA/OT, Step1-Read-Data-Formatting.R:76-93)
     f_codec = (~F.col("canon_codec").isin(*config.CODEC_ALLOWLIST)
                | F.col("canon_codec").isNull())
 

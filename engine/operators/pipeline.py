@@ -1,13 +1,12 @@
 """The fused end-to-end pipeline (SURVEY.md §4.3).
 
     scan -> [native heuristic flags ∥ fused scoring UDF] -> dup flags
-         -> decision -> labels (+ lineage metrics)
+         -> decision -> labels
 
-One DataFrame pass; the only shuffles are (a) the two hash-group windows
-and the band self-join inside dedup, (b) the lineage aggregation.  The
-reference needed six mutating passes with CSV materialization between them
-(PostProcessing-Pipeline.R:20-44); Catalyst fuses our scan + UDF + flag
-projection into a single stage.
+One DataFrame pass; the only shuffles are the two hash-group windows and
+the band self-join inside dedup.  The reference needed six mutating passes
+with CSV materialization between them (PostProcessing-Pipeline.R:20-44);
+Catalyst fuses our scan + UDF + flag projection into a single stage.
 """
 
 from __future__ import annotations
@@ -55,7 +54,3 @@ def run_pipeline(clips: DataFrame, persist: bool = True) -> DataFrame:
     decided = decision.with_decision(with_dups)
     return decision.to_labels(decided)
 
-
-def run_pipeline_with_metrics(clips: DataFrame) -> tuple[DataFrame, DataFrame]:
-    labels = run_pipeline(clips)
-    return labels, decision.lineage_metrics(labels)

@@ -40,6 +40,7 @@ SCORED_FIELDS = [
     T.StructField("sr_hz", T.IntegerType(), True),
     T.StructField("dur_ms", T.IntegerType(), True),
     T.StructField("codec", T.StringType(), True),
+    T.StructField("canon_codec", T.StringType(), True),
     T.StructField("transcript", T.StringType(), True),
     T.StructField("repaired", T.BooleanType(), False),
     T.StructField("decoded_dur_ms", T.IntegerType(), True),
@@ -76,8 +77,9 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     silence = [None] * n
     flatness = [None] * n
     mel = [None] * n
+    canon = [config.canon_codec(c) for c in pdf["codec"]]
     for i, (payload, sr, codec) in enumerate(
-            zip(pdf["bytes"], pdf["sr_hz"], pdf["codec"])):
+            zip(pdf["bytes"], pdf["sr_hz"], canon)):
         sr_i = int(sr) if pd.notna(sr) else None
         p = bytes(payload) if payload is not None else None
         # analyze() picks the decoder by canonical codec and decodes +
@@ -85,7 +87,7 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         # payload is the dominant per-row volume); undecodable bytes yield
         # null features, never PCM-interpreted garbage
         u, (d, ns, r, cr, ck), (sil, flat, mp) = audio_core.analyze(
-            p, sr_i, config.canon_codec(codec))
+            p, sr_i, codec)
         undec[i] = u
         dec_dur[i], n_samp[i], rms[i], clip_ratio[i], checksum[i] = d, ns, r, cr, ck
         silence[i], flatness[i], mel[i] = sil, flat, mp
@@ -108,6 +110,9 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         "sr_hz": pdf["sr_hz"].values,
         "dur_ms": pdf["dur_ms"].values,
         "codec": pdf["codec"].values,
+        # the one codec canonicalization: CODEC_INVALID reads this column,
+        # so the decoder choice and the rule can never disagree
+        "canon_codec": canon,
         "transcript": transcripts,
         "repaired": repaired,
         "decoded_dur_ms": pd.array(dec_dur, dtype="Int32"),

@@ -166,16 +166,22 @@ def _boundaries_from_back(centers: np.ndarray, counts: np.ndarray,
                           back: np.ndarray, k: int) -> list[float]:
     """Backtrack a k-segmentation from a DP `back` table built with
     k_max >= k (back[t] is the t+2-cluster layer, valid for any smaller
-    k) and convert it to k-1 boundaries = midpoints of adjacent cluster
-    means."""
+    k) and convert it to boundaries = midpoints of adjacent cluster means.
+
+    k is clamped to the number of occupied bins: more clusters than that
+    would be empty, and an empty cluster has no mean to put a boundary
+    next to.  So the result holds min(k, occupied) - 1 strictly increasing
+    boundaries.  With at most one occupied bin no two non-empty clusters
+    exist at all: like kmeans2_boundary when it finds no valid split, the
+    k-1 boundaries are all the middle bin center, so the k=2 equality
+    holds on ALL inputs."""
     w = counts.astype(np.float64)
     x = centers.astype(np.float64)
     n = len(x)
-    if w.sum() == 0:
-        # zero-weight histogram: every segmentation is vacuous — mirror
-        # kmeans2_boundary's degenerate convention (the middle bin center)
-        # so the k=2 equality invariant holds on ALL inputs
+    occupied = int(np.count_nonzero(w))
+    if occupied <= 1:
         return [float(x[n // 2])] * (k - 1)
+    k = min(k, occupied)
     splits = []
     j = n
     for t in range(k - 2, -1, -1):
@@ -185,24 +191,22 @@ def _boundaries_from_back(centers: np.ndarray, counts: np.ndarray,
     cw = np.concatenate([[0.0], np.cumsum(w)])
     cwx = np.concatenate([[0.0], np.cumsum(w * x)])
     edges = [0] + splits + [n]
-    means = []
-    for a, b in zip(edges, edges[1:]):
-        ww = cw[b] - cw[a]
-        means.append((cwx[b] - cwx[a]) / ww if ww > 0
-                     else float(x[(a + b) // 2 if b > a else min(a, n - 1)]))
+    means = [(cwx[b] - cwx[a]) / (cw[b] - cw[a])
+             for a, b in zip(edges, edges[1:])]
     return [float((means[i] + means[i + 1]) / 2.0) for i in range(len(means) - 1)]
 
 
 def kmeans_boundaries(centers: np.ndarray, counts: np.ndarray,
                       k: int) -> list[float]:
-    """EXACT 1-D k-means segmentation -> k-1 boundary values, each the
+    """EXACT 1-D k-means segmentation -> k-1 boundary values (fewer when
+    fewer than k bins are occupied, see _boundaries_from_back), each the
     midpoint of the means of two adjacent clusters (the same convention
-    kmeans2_boundary uses at k=2, INCLUDING its zero-weight degenerate
-    fallback).  Deterministic: ties in the DP argmin resolve to the
-    leftmost split.  This is the multi-component analog of the
-    reference's 5-7-component strata derivation (mixture fit ->
-    component boundaries, Step3-Temporal-Inconsistency.R:150-355) with the
-    seed-lottery mixture fit replaced by a globally-optimal segmentation."""
+    kmeans2_boundary uses at k=2, INCLUDING its degenerate fallback).
+    Deterministic: ties in the DP argmin resolve to the leftmost split.
+    This is the multi-component analog of the reference's 5-7-component
+    strata derivation (mixture fit -> component boundaries,
+    Step3-Temporal-Inconsistency.R:150-355) with the seed-lottery mixture
+    fit replaced by a globally-optimal segmentation."""
     _wss, back = _kmeans_dp(centers, counts, k)
     return _boundaries_from_back(centers, counts, back, k)
 
@@ -212,7 +216,9 @@ def _elbow_from_wss(wss: list[float]) -> int:
     of log(WSS+eps), defined at k = 2..len(wss)-1 (the discrete curvature
     criterion; clusGap's B=50 bootstrap is a seed lottery the engine
     deliberately replaces with a closed-form, reproducible statistic)."""
-    logw = np.log(np.asarray(wss) + 1e-12)
+    # a WSS of an exact fit can round to slightly below zero; log of it
+    # would be NaN, and argmax returns the first NaN
+    logw = np.log(np.maximum(np.asarray(wss), 0.0) + 1e-12)
     if len(wss) >= 3:
         curv = logw[:-2] - 2 * logw[1:-1] + logw[2:]
         return int(np.argmax(curv)) + 2
@@ -251,7 +257,8 @@ def propose_strata(centers: np.ndarray, counts: np.ndarray,
     diag = {"k": list(range(1, k_max + 2)),
             "wss": [round(v, 6) for v in wss],
             "elbow_k": _elbow_from_wss(wss)}
-    k = min(diag["elbow_k"], k_max)
+    # no more strata than occupied bins, so the boundaries never repeat
+    k = min(diag["elbow_k"], k_max, max(int(np.count_nonzero(counts)), 1))
     bounds = _boundaries_from_back(centers, counts, back, k)
     return {
         "k": k,

@@ -11,10 +11,9 @@ per-clip rules only — duplicate rules need global state that never expires
 and belong to the periodic batch reconciliation, so the streaming decision
 treats dup flags as False.  State per group is O(1) (a few counters), so
 state-store size is bounded by the language-key cardinality, not rows.
-(The repair stage is also absent from THIS feed: its merge-back is a join,
-and stream-stream joins of two derivations of the same source need
-watermark plumbing that a dashboard feed doesn't warrant.  The ingest path
-in stream_pipeline runs repair — foreachBatch hands it a batch frame.)
+Repair is part of this feed too: it runs inside scoring.score_clips (the
+fused UDF), so the labels here see the repaired transcript, like the batch
+and ingest paths.
 
 `stream_dup_flags` and `stream_neardup_flags` narrow the lambda split:
 an exact-audio-dup flag (checksum state) and a textual near-dup flag

@@ -50,7 +50,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from engine import config, lineage, schema, sources
-    from engine.operators import pipeline
+    from engine.operators import decision, pipeline
 
     spark = (SparkSession.builder.appName("clip-quality-pipeline")
              .config("spark.sql.adaptive.enabled", "true")
@@ -63,10 +63,14 @@ def main() -> int:
     t0 = time.time()
     clips = sources.read_clips_table(spark, args.input)
     if args.no_checkpoint:
-        labels, metrics = pipeline.run_pipeline_with_metrics(clips)
-        (labels.repartition("part_id").write.mode("overwrite")
+        (pipeline.run_pipeline(clips).repartition("part_id")
+         .write.mode("overwrite")
          .partitionBy("part_id").parquet(f"{args.output}/labels"))
-        metrics.coalesce(1).write.mode("overwrite") \
+        # metrics over the labels just written, as Stage B does: the
+        # uncached labels frame would run flags, dedup and decision again
+        labels = spark.read.schema(schema.LABELS_SCHEMA) \
+            .parquet(f"{args.output}/labels")
+        decision.lineage_metrics(labels).coalesce(1).write.mode("overwrite") \
             .parquet(f"{args.output}/lineage")
         metrics = spark.read.schema(schema.LINEAGE_SCHEMA) \
             .parquet(f"{args.output}/lineage")

@@ -57,6 +57,41 @@ def test_query_matches_duckdb(spark, ddb, name):
     pd.testing.assert_frame_equal(g, e, check_dtype=False, check_exact=True)
 
 
+def test_lineage_metrics_match_pandas_recount(spark):
+    """lineage_metrics (one aggregation) over the entry fixture's labels
+    equals a pandas recount, map column included; drop_reason_counts
+    holds only the reasons that occurred."""
+    from engine import config
+    from engine.operators import decision
+
+    labels = entrymod._labels_df(spark)
+    got = (decision.lineage_metrics(labels).toPandas()
+           .sort_values("part_id").reset_index(drop=True))
+    lab = labels.toPandas()
+    exp = (lab.groupby("part_id")
+           .agg(n_total=("clip_id", "size"), n_kept=("keep", "sum"),
+                n_scrubbed=("n_scrub_hits", lambda h: int((h > 0).sum())),
+                n_repaired=("repaired", "sum"))
+           .reset_index())
+    exp["n_dropped"] = exp["n_total"] - exp["n_kept"]
+    reasons = (lab[~lab["keep"]].groupby("part_id")["drop_reason"]
+               .agg(lambda r: dict(r.value_counts())))
+    exp["drop_reason_counts"] = exp["part_id"].map(
+        lambda p: sorted(reasons.get(p, {}).items()))
+    got["drop_reason_counts"] = got["drop_reason_counts"].map(
+        lambda m: sorted(dict(m).items()))
+    assert len(got) == len(exp) == lab["part_id"].nunique()
+    cols = ["part_id", "n_total", "n_kept", "n_dropped", "n_scrubbed",
+            "n_repaired", "drop_reason_counts"]
+    pd.testing.assert_frame_equal(got[cols], exp[cols], check_dtype=False)
+    assert (got["status"] == "committed").all()
+    assert (got["rule_version"] == config.rule_version()).all()
+    assert all(n > 0 for m in got["drop_reason_counts"] for _, n in m)
+    # a part with no drops gets an empty map, not null
+    kept_only = decision.lineage_metrics(labels.where("keep")).toPandas()
+    assert all(dict(m) == {} for m in kept_only["drop_reason_counts"])
+
+
 def test_gate_catches_uncast_sum_dtype_split(ddb):
     """Regression for the round-4 driver reds: DuckDB returns uncast
     SUM(CASE ...) as HUGEINT -> pandas float64 while Spark returns int64;

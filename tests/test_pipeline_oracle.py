@@ -151,3 +151,35 @@ def test_engine_matches_oracle_telephony_g711(spark, tmp_path):
         undec = [cid for cid in fam_clean
                  if flags[cid].get(config.RULE_UNDECODABLE)]
         assert not undec, (fam, undec[:5])
+
+
+def test_codec_whitespace_engine_matches_oracle(spark, tmp_path):
+    """Codecs padded with whitespace Spark's trim() keeps (tab, newline,
+    no-break space): the scoring UDF decodes them under their canonical
+    codec, so CODEC_INVALID must not fire on them either — engine and
+    oracle agree row for row."""
+    import numpy as np
+
+    from engine import config, fixtures
+
+    t = np.arange(16000, dtype=np.float32)
+    pcm = (2000 * np.sin(2 * np.pi * 440.0 * t / 16000)).astype("<i2").tobytes()
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    codecs = ["flac\t", "\nMP3", "\u00a0opus", "\tpcm", "wav\u00a0", "pcm"]
+    clips_pd = pd.DataFrame(
+        [(f"w{i}", pcm, 16000, 1000, c, text) for i, c in enumerate(codecs)],
+        columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"])
+    path = str(tmp_path / "ws_codecs")
+    fixtures.write_clips_parquet(spark, clips_pd, path)
+
+    eng = _run_engine(spark, path)
+    ora = oracle.label_clips(clips_pd)
+    assert eng["clip_id"].tolist() == ora["clip_id"].tolist()
+    assert eng["keep"].tolist() == ora["keep"].tolist()
+    assert (eng["drop_reason"].fillna("<keep>").tolist()
+            == ora["drop_reason"].fillna("<keep>").tolist())
+    assert eng["rule_flags"].tolist() == ora["rule_flags"].tolist()
+    assert not any(f[config.RULE_CODEC_INVALID] for f in eng["rule_flags"])
+    # the PCM spellings decode like the plain one
+    assert (eng.loc[eng["clip_id"].isin(["w3", "w4"]), "decoded_dur_ms"]
+            == eng.loc[eng["clip_id"] == "w5", "decoded_dur_ms"].iloc[0]).all()

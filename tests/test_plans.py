@@ -58,6 +58,18 @@ def test_single_python_crossing_before_dedup(spark, clips_t1):
     assert "ArrowEvalPython" not in _plan(flagged)
 
 
+def test_no_case_mapping_after_scoring(spark, clips_t1):
+    """The codec is canonicalized once, in the scoring UDF: the flag pass
+    runs no JVM case mapping, whose first call in a JVM initializes ICU's
+    collation support (seconds of CPU per job)."""
+    path, _, _ = clips_t1
+    clips = pipeline.read_clips(spark, path)
+    flagged = heuristics.with_heuristic_flags(scoring.score_clips(clips))
+    analyzed = flagged._jdf.queryExecution().analyzed().toString()
+    for fn in ("lower(", "upper(", "initcap("):
+        assert fn not in analyzed, fn
+
+
 def test_repair_fused_no_extra_stage(spark, clips_t1):
     """Repair-then-rescore is fused into the scoring UDF: it must add NO
     Python crossing, join, union, or pinned repartition to the fused pass

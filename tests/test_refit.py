@@ -239,7 +239,11 @@ def test_kmeans_boundaries_degenerate_matches_kmeans2():
     """Review regression: on a zero-weight histogram (score column
     entirely null) kmeans_boundaries must keep its documented k=2
     equality with kmeans2_boundary — both fall back to the middle bin
-    center."""
+    center.  Likewise with all weight in ONE bin (a constant score
+    column), where the DP used to elect an empty first cluster (0.714 at
+    k=2, the non-increasing [0.0, 0.0, 0.714] at k=4); with two occupied
+    bins k clamps to 2, and propose_strata never proposes more strata
+    than occupied bins."""
     import numpy as np
 
     from engine import refit
@@ -248,3 +252,41 @@ def test_kmeans_boundaries_degenerate_matches_kmeans2():
     w = np.zeros(8, dtype=np.int64)
     assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
     assert refit.kmeans_boundaries(x, w, 4) == [float(x[4])] * 3
+
+    one = w.copy()
+    one[0] = 5
+    assert refit.kmeans_boundaries(x, one, 2) == [refit.kmeans2_boundary(x, one)]
+    assert refit.kmeans_boundaries(x, one, 4) == [float(x[4])] * 3
+    assert refit.propose_strata(x, one)["boundaries"] == []
+
+    two = one.copy()
+    two[5] = 3
+    for k in (2, 4, 7):
+        assert refit.kmeans_boundaries(x, two, k) == [refit.kmeans2_boundary(x, two)]
+    p = refit.propose_strata(x, two)
+    assert p["k"] == 2 and len(p["boundaries"]) == 1
+
+
+def test_boundaries_strictly_increasing_on_sparse_histograms():
+    """Property: on any histogram with >= 2 occupied bins, the k-boundary
+    list has min(k, occupied) - 1 strictly increasing entries, equals
+    kmeans2_boundary at k=2, and propose_strata's k matches its list."""
+    import numpy as np
+
+    from engine import refit
+
+    rng = np.random.default_rng(5)
+    for _ in range(100):
+        n = int(rng.integers(2, 30))
+        x = np.sort(rng.uniform(0, 100, n))
+        w = rng.integers(0, 1000, n) * (rng.random(n) < rng.uniform(0.1, 1))
+        occupied = int(np.count_nonzero(w))
+        if occupied < 2:
+            continue
+        for k in range(2, 8):
+            b = refit.kmeans_boundaries(x, w, k)
+            assert len(b) == min(k, occupied) - 1, (x, w, k, b)
+            assert all(lo < hi for lo, hi in zip(b, b[1:])), (x, w, k, b)
+        assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
+        p = refit.propose_strata(x, w)
+        assert len(p["boundaries"]) == p["k"] - 1 <= occupied - 1

@@ -19,7 +19,7 @@ def _frames(labels, metrics) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Order-free pandas views of (labels, lineage_metrics)."""
     a = labels.toPandas().sort_values("clip_id").reset_index(drop=True)
     m = metrics.toPandas().sort_values("part_id").reset_index(drop=True)
-    # collect_list builds the map: entry order is not part of the contract
+    # map entry order is not part of the contract
     m["drop_reason_counts"] = m["drop_reason_counts"].map(
         lambda x: sorted(dict(x).items()))
     return a, m
@@ -77,6 +77,29 @@ def test_partial_then_resume_identical(spark, committed, tmp_path):
     assert any("48 to go" in s for s in seen), seen
 
     pd.testing.assert_frame_equal(labels_a, _frames(labels_b, metrics_b)[0])
+
+
+def test_commit_rows_need_no_python_worker(spark, committed, tmp_path,
+                                          monkeypatch):
+    """Commit rows are built in the JVM: with createDataFrame (which ships
+    Python rows through a worker) unavailable, a fresh run and a resume
+    that labels again both complete, with the same labels."""
+    from pyspark.sql import SparkSession
+
+    _, clips, labels_a, metrics_a = committed
+
+    def no_python_rows(*args, **kwargs):
+        raise AssertionError("commit rows went through createDataFrame")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rows)
+    out = str(tmp_path / "fresh")
+    lineage.run_checkpointed(spark, clips, out, wave_size=32)
+    shutil.rmtree(os.path.join(out, "lineage"))
+    labels, metrics = lineage.run_checkpointed(spark, clips, out, wave_size=32)
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
+    assert lineage.committed_parts(spark, out) == set(range(64))
 
 
 def test_rerun_on_committed_output_skips_stage_b(spark, committed, tmp_path,

@@ -12,14 +12,19 @@ from engine.operators import heuristics
 
 
 def _df(spark, rows):
+    """Scored-shaped rows: `canon_codec` comes from config.canon_codec, as
+    the scoring UDF emits it."""
     schema = T.StructType([
         T.StructField("clip_id", T.StringType()),
         T.StructField("sr_hz", T.IntegerType()),
         T.StructField("dur_ms", T.IntegerType()),
         T.StructField("codec", T.StringType()),
+        T.StructField("canon_codec", T.StringType()),
         T.StructField("transcript", T.StringType()),
     ])
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(
+        [(cid, sr, dur, codec, config.canon_codec(codec), t)
+         for cid, sr, dur, codec, t in rows], schema)
 
 
 def _flags(spark, rows) -> pd.DataFrame:
@@ -63,6 +68,11 @@ def test_codec_canonicalization(spark):
         ("alias", 16000, 1000, "mpeg3", "x"),
         ("spacey", 16000, 1000, " Flac ", "x"),
         ("wav", 16000, 1000, "wav", "x"),
+        # non-space whitespace: str.strip() removes it, Spark's trim() only
+        # strips ASCII spaces — the decoder and the rule must agree
+        ("tab", 16000, 1000, "flac\t", "x"),
+        ("newline", 16000, 1000, "\nMP3", "x"),
+        ("nbsp", 16000, 1000, "\u00a0opus", "x"),
         ("bad", 16000, 1000, "xvc9", "x"),
         ("empty", 16000, 1000, "", "x"),
         ("null", 16000, 1000, None, "x"),
@@ -71,8 +81,12 @@ def test_codec_canonicalization(spark):
     assert f.loc["alias", "canon_codec"] == "mp3"
     assert f.loc["spacey", "canon_codec"] == "flac"
     assert f.loc["wav", "canon_codec"] == "pcm_s16le"
+    assert f.loc["tab", "canon_codec"] == "flac"
+    assert f.loc["newline", "canon_codec"] == "mp3"
+    assert f.loc["nbsp", "canon_codec"] == "opus"
     col = "f_" + config.RULE_CODEC_INVALID
-    for cid in ("clean", "upper", "alias", "spacey", "wav"):
+    for cid in ("clean", "upper", "alias", "spacey", "wav",
+                "tab", "newline", "nbsp"):
         assert not f.loc[cid, col], cid
     for cid in ("bad", "empty", "null"):
         assert f.loc[cid, col], cid
