@@ -184,7 +184,8 @@ def _labels_df(spark: SparkSession) -> DataFrame:
 
         def _write(tmp: str) -> None:
             clips = pipeline.read_clips(spark, _clips_path(spark))
-            pipeline.run_pipeline(clips).write.mode("overwrite").parquet(tmp)
+            with pipeline.labeled(clips) as labels:
+                labels.write.mode("overwrite").parquet(tmp)
 
         _CLIPS_CACHE["labels"] = _materialize(_labels_parquet_path(), _write)
     return spark.read.parquet(_CLIPS_CACHE["labels"])

@@ -70,38 +70,25 @@ def _split_bytes(cpus: int, n_clips: int) -> int:
 
 
 def _build_spark(cpus: int, n_clips: int = 24000):
-    from pyspark.sql import SparkSession
-
-    from engine import config
-
-    # one BLAS/OpenMP thread per Python UDF worker: with K concurrent
+    # importing engine pins one BLAS/OpenMP thread per Python UDF worker
+    # (engine/__init__.py) before the JVM starts: with K concurrent
     # workers, default numpy thread pools (ncpus each) oversubscribe the
     # box K*ncpus-fold and *invert* scaling (local[32] measured 4x slower
-    # than local[8] before this pin); on a real cluster the same pin goes
-    # in spark.executorEnv.*
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
-                "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
+    # than local[8] before the pin)
+    from engine import session
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"spark-graft-bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(config.ARROW_MAX_RECORDS_PER_BATCH))
+    return session.get_or_create(f"spark-graft-bench-{cpus}", **{
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.default.parallelism": cpus,
         # the bench table is small (GBs); default 128m file-packing can
         # coalesce the scan into fewer tasks than cores, which a real
         # multi-TB table never hits — target ~4 scan splits per core
-        .config("spark.sql.files.maxPartitionBytes", str(_split_bytes(cpus, n_clips)))
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+        "spark.sql.files.maxPartitionBytes": _split_bytes(cpus, n_clips),
+        "spark.sql.files.openCostInBytes": "1m",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.ui.enabled": "false",
+    })
 
 
 GROUP = 12_000  # clips per append-write group (~0.5 GB of payload)
@@ -152,10 +139,9 @@ def _time_clips_pipeline(spark, n_clips: int) -> dict:
     clips = pipeline.read_clips(spark, path)
     n_rows = clips.count()  # warm file listing/footers outside the timed span
     t0 = time.time()
-    labels = pipeline.run_pipeline(clips)
-    labels.write.format("noop").mode("overwrite").save()
+    with pipeline.labeled(clips) as labels:
+        labels.write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
-    spark.catalog.clearCache()  # drop the pipeline's persisted scored table
     return {"sec": round(dt, 3), "rows": n_rows,
             "clips_per_sec": round(n_rows / dt, 1)}
 

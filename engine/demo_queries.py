@@ -463,10 +463,7 @@ def q_adjacent_pair_calc(spark, sf_dir):
     arithmetic with the even/odd modular split (Step3:1142-1260), haversine
     distance (distance84, _Functions_.R:1-12, incl. its 4-decimal round)
     and the spherical geodesic midpoint (the great-circle analog of the
-    reference's project->average->reproject midpoint, _Functions_.R:14-29;
-    the EXACT projected form — Krüger-series EPSG:26915 — lives in
-    engine/geo.py as `projected_midpoint`/`projected_midpoint_udf`, kept
-    out of this entry because its series has no DuckDB-expressible twin).
+    reference's project->average->reproject midpoint, _Functions_.R:14-29).
     Merged from the round-3 `interp_midpoint` / `haversine_adjacent` /
     `geodesic_midpoint` entries: all three shared the same adjacent-pair
     row basis, so one entry keeps the 50-entry driver correctness window

@@ -17,10 +17,11 @@ resumability around the expensive stage:
   Stage B (cheap, global, idempotent): dup flags need GLOBAL hash groups
      (duplicates cross partitions), so they run over the full scored
      table — but only over ~100-byte rows (checksums + simhash), never
-     the audio payload.  Decision + labels + lineage_metrics are then a
-     full overwrite, safe to repeat.  Once the lineage write has
-     finished, Stage B appends one `labeled` row per committed part_id
-     to the same `_state` log (the same write-then-commit order).
+     the audio payload.  Labels (pipeline.label, the composition the
+     in-memory pass uses) + lineage_metrics are then a full overwrite,
+     safe to repeat.  Once the lineage write has finished, Stage B
+     appends one `labeled` row per committed part_id to the same
+     `_state` log (the same write-then-commit order).
 
 A resume skips Stage B — and returns readers over the committed labels/
 and lineage/ — exactly when, at the current rule_version:
@@ -61,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import config, schema
-from .operators import decision, dedup, heuristics, scoring
+from .operators import decision, pipeline, scoring
 
 STATE_SCHEMA = T.StructType([
     T.StructField("part_id", T.IntegerType(), False),
@@ -165,10 +166,7 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
     scored_all = spark.read.schema(scoring.SCORED_SCHEMA).parquet(scored_path)
     # repair is fused into the Stage-A scoring UDF (scored rows already
     # carry the repaired transcript + `repaired`), so Stage B is all-native
-    flagged = heuristics.with_model_flags(heuristics.with_heuristic_flags(scored_all))
-    decided = decision.with_decision(dedup.with_dup_flags(flagged))
-    labels = decision.to_labels(decided)
-    (labels.repartition("part_id")
+    (pipeline.label(scored_all).repartition("part_id")
      .write.mode("overwrite").partitionBy("part_id")
      .parquet(f"{output_path}/labels"))
 

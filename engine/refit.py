@@ -252,13 +252,15 @@ def propose_strata(centers: np.ndarray, counts: np.ndarray,
     k_max-long scan could never elect k_max (a 6-modal corpus at k_max=6
     previously collapsed to a 2-band proposal).  The default k_max=8
     covers the reference's observed 5-7-component range with headroom.
-    ONE DP pass serves both the diagnostics and the backtrack."""
+    ONE DP pass serves both the diagnostics and the backtrack; the
+    diagnostics report k = 1..k_max, the shape cluster_diagnostics has."""
     wss, back = _kmeans_dp(centers, counts, k_max + 1)
-    diag = {"k": list(range(1, k_max + 2)),
-            "wss": [round(v, 6) for v in wss],
-            "elbow_k": _elbow_from_wss(wss)}
+    elbow_k = _elbow_from_wss(wss)
+    diag = {"k": list(range(1, k_max + 1)),
+            "wss": [round(v, 6) for v in wss[:k_max]],
+            "elbow_k": elbow_k}
     # no more strata than occupied bins, so the boundaries never repeat
-    k = min(diag["elbow_k"], k_max, max(int(np.count_nonzero(counts)), 1))
+    k = min(elbow_k, k_max, max(int(np.count_nonzero(counts)), 1))
     bounds = _boundaries_from_back(centers, counts, back, k)
     return {
         "k": k,

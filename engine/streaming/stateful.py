@@ -8,9 +8,11 @@ an updated row per language per batch (a live quality dashboard feed).
 
 Scope matches the documented lambda split (stream_pipeline docstring):
 per-clip rules only — duplicate rules need global state that never expires
-and belong to the periodic batch reconciliation, so the streaming decision
-treats dup flags as False.  State per group is O(1) (a few counters), so
-state-store size is bounded by the language-key cardinality, not rows.
+and belong to the periodic batch reconciliation, so the streaming labels
+come from the shared composition with dup flags pinned False
+(`pipeline.label(scored, dups=False)`).  State per group is O(1) (a few
+counters), so state-store size is bounded by the language-key
+cardinality, not rows.
 Repair is part of this feed too: it runs inside scoring.score_clips (the
 fused UDF), so the labels here see the repaired transcript, like the batch
 and ingest paths.
@@ -37,7 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import config, simhash_core
-from ..operators import decision, heuristics, scoring
+from ..operators import pipeline, scoring
 
 STATS_SCHEMA = T.StructType([
     T.StructField("lang", T.StringType(), False),
@@ -66,11 +68,7 @@ def _update(key, pdfs, state: GroupState):
 def labeled_clip_stream(stream_clips: DataFrame) -> DataFrame:
     """streaming clips -> streaming per-clip labels (per-clip rules only;
     dup flags pinned False per the lambda split)."""
-    scored = scoring.score_clips(stream_clips)
-    flagged = heuristics.with_model_flags(heuristics.with_heuristic_flags(scored))
-    for rule in (config.RULE_EXACT_DUP, config.RULE_NEAR_DUP):
-        flagged = flagged.withColumn(f"f_{rule}", F.lit(False))
-    return decision.with_decision(flagged)
+    return pipeline.label(scoring.score_clips(stream_clips), dups=False)
 
 
 def running_lang_stats(labeled_stream: DataFrame) -> DataFrame:

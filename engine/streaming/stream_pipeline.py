@@ -9,6 +9,9 @@ output table.
 
 Semantics deliberately scoped (and documented):
   * per-clip rules + scrub + scoring: identical to batch (pure per-row);
+    each micro-batch goes through `pipeline.labeled`, the batch pass, whose
+    scope releases the batch's cached scored table once its labels are
+    written, so a long-running stream holds no cache across batches;
   * duplicate detection: WITHIN-micro-batch only (plus against nothing
     else) — global dedup stays a periodic batch job over the accumulated
     table, because unbounded exact-dup state per checksum would grow
@@ -102,14 +105,14 @@ def start_stream(spark: SparkSession, input_path: str, output_path: str,
     stream = read_clip_stream(spark, input_path, max_files_per_trigger)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        labels = pipeline.run_pipeline(batch_df, persist=True)
         # repartition by the partition column so each part_id dir gets one
         # file per batch (otherwise every shuffle partition contributes a
         # sliver file to every dir); per-batch directory + overwrite =
         # idempotent under batch retry
-        (labels.repartition("part_id")
-         .write.mode("overwrite").partitionBy("part_id")
-         .parquet(f"{output_path}/labels/batch_id={batch_id}"))
+        with pipeline.labeled(batch_df) as labels:
+            (labels.repartition("part_id")
+             .write.mode("overwrite").partitionBy("part_id")
+             .parquet(f"{output_path}/labels/batch_id={batch_id}"))
 
     writer = (stream.writeStream
               .foreachBatch(_process)

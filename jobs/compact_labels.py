@@ -53,12 +53,9 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from engine import session
 
-    spark = (SparkSession.builder.appName("clip-quality-compact")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    spark = session.get_or_create("clip-quality-compact")
     out = compact(spark, args.input, args.output)
     print(f"compacted {out.count()} label rows to {args.output}")
     spark.stop()

@@ -24,14 +24,10 @@ def main() -> int:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
+    from engine import session
     from engine.operators import evaluation
 
-    spark = (SparkSession.builder.appName("clip-quality-eval-report")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    spark = session.get_or_create("clip-quality-eval-report")
 
     labels = spark.read.parquet(args.labels)
     report = evaluation.corpus_report(labels)

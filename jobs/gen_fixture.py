@@ -24,11 +24,9 @@ def main() -> int:
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from engine import fixtures, session
 
-    from engine import fixtures
-
-    spark = SparkSession.builder.appName("clip-fixture-gen").getOrCreate()
+    spark = session.get_or_create("clip-fixture-gen")
     weights = (fixtures.TELEPHONY_CODEC_WEIGHTS
                if args.codec_mix == "telephony" else None)
     clips_pd, planted = fixtures.generate_clips(

@@ -28,14 +28,9 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from engine import session, sources
 
-    from engine import sources
-
-    spark = (SparkSession.builder.appName("clip-quality-ingest")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    spark = session.get_or_create("clip-quality-ingest")
 
     clips = sources.ingest_manifest(spark, args.manifest, args.payloads)
     (clips.repartition("part_id").write.mode("overwrite")

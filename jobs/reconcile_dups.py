@@ -25,19 +25,12 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from engine import config
+    from engine import session
     from engine.streaming import reconcile
 
-    spark = (SparkSession.builder.appName("clip-quality-reconcile")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                     str(config.ARROW_MAX_RECORDS_PER_BATCH))
-             .getOrCreate())
+    spark = session.get_or_create("clip-quality-reconcile")
 
     stream_labels = spark.read.parquet(args.stream_labels)
     corrected, diff = reconcile.reconcile(spark, args.clips, stream_labels)

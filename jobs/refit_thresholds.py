@@ -33,18 +33,10 @@ def main() -> int:
                     help="input is an already-scored table (no UDF pass)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    from engine import config, refit, sources
+    from engine import refit, session, sources
     from engine.operators import scoring
 
-    spark = (SparkSession.builder.appName("clip-quality-refit")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                     str(config.ARROW_MAX_RECORDS_PER_BATCH))
-             .getOrCreate())
+    spark = session.get_or_create("clip-quality-refit")
 
     if args.scored:
         scored = spark.read.parquet(args.input)

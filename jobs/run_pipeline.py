@@ -21,19 +21,8 @@ Output layout:
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 import time
-
-# One BLAS/OpenMP thread per Python UDF worker (same pin as bench.py):
-# with K concurrent workers an unpinned numpy thread pool oversubscribes
-# the box K*ncpus-fold, and even a single worker pays the pool's wake
-# cost on every small per-clip reduction.  Must be set before the JVM
-# starts so forked python workers inherit it; on a real cluster the
-# equivalent is spark.executorEnv.*.
-for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
-             "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
-    os.environ.setdefault(_var, "1")
 
 
 def main() -> int:
@@ -46,26 +35,21 @@ def main() -> int:
                     help="single fused in-memory pass, labels only")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from engine import config, lineage, schema, sources
+    # importing engine pins the BLAS/OpenMP pools (engine/__init__.py)
+    # before the JVM starts, so forked Python workers inherit the pin
+    from engine import config, lineage, schema, session, sources
     from engine.operators import decision, pipeline
 
-    spark = (SparkSession.builder.appName("clip-quality-pipeline")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                     str(config.ARROW_MAX_RECORDS_PER_BATCH))
-             .getOrCreate())
+    spark = session.get_or_create("clip-quality-pipeline")
 
     t0 = time.time()
     clips = sources.read_clips_table(spark, args.input)
     if args.no_checkpoint:
-        (pipeline.run_pipeline(clips).repartition("part_id")
-         .write.mode("overwrite")
-         .partitionBy("part_id").parquet(f"{args.output}/labels"))
+        with pipeline.labeled(clips) as labels:
+            (labels.repartition("part_id").write.mode("overwrite")
+             .partitionBy("part_id").parquet(f"{args.output}/labels"))
         # metrics over the labels just written, as Stage B does: the
         # uncached labels frame would run flags, dedup and decision again
         labels = spark.read.schema(schema.LABELS_SCHEMA) \

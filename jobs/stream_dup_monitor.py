@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -51,10 +50,9 @@ def main() -> int:
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
     args = ap.parse_args()
 
-    spark = (SparkSession.builder.appName("clip-stream-dup-monitor")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    from engine import session
+
+    spark = session.get_or_create("clip-stream-dup-monitor")
     # without this, a query holding registered processing-time timeouts
     # (the TTL state) schedules empty no-data micro-batches back-to-back
     # until a timer fires — under availableNow that is an hour-long spin

@@ -16,24 +16,14 @@ os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
 
 
 def _build_session(master: str = "local[4]", shuffle_partitions: int = 8):
-    from pyspark.sql import SparkSession
+    from engine import session
 
-    from engine import config
-
-    return (SparkSession.builder
-            .master(master)
-            .appName("spark-clip-quality-tests")
-            .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-            # windowed aggs align to UTC epoch; pin the session zone so
-            # NTZ<->TZ casts are identity and results are host-independent
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                    str(config.ARROW_MAX_RECORDS_PER_BATCH))
-            .config("spark.driver.memory", "8g")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
+    return session.get_or_create("spark-clip-quality-tests", **{
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": shuffle_partitions,
+        "spark.driver.memory": "8g",
+        "spark.ui.enabled": "false",
+    })
 
 
 @pytest.fixture(scope="session")

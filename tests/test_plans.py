@@ -42,7 +42,7 @@ def test_scoring_consumes_bytes(spark, clips_t1):
     clips = pipeline.read_clips(spark, path)
     scored = scoring.score_clips(clips)
     assert "bytes" not in scored.columns
-    labels = pipeline.run_pipeline(clips, persist=False)
+    labels = pipeline.label(scored)
     assert "bytes" not in labels.columns
 
 
@@ -80,7 +80,7 @@ def test_repair_fused_no_extra_stage(spark, clips_t1):
     clips = pipeline.read_clips(spark, path)
     scored = scoring.score_clips(clips)
     assert "repaired" in scored.columns  # lineage emitted by the fused UDF
-    plan = _plan(pipeline.run_pipeline(clips, persist=False))
+    plan = _plan(pipeline.label(scored))
     assert "RoundRobinPartitioning(8" not in plan
     assert "Union" not in plan
     # no second Python stage shape: every MapInPandas occurrence is the one
@@ -120,8 +120,8 @@ def test_salted_report_aggregates_in_two_phases(spark, clips_t1):
     from engine.operators import evaluation, pipeline
 
     path, _, _ = clips_t1
-    labels = pipeline.run_pipeline(pipeline.read_clips(spark, path),
-                                   persist=False)
+    labels = pipeline.label(
+        scoring.score_clips(pipeline.read_clips(spark, path)))
     plan = evaluation.corpus_report(labels)._jdf.queryExecution() \
         .optimizedPlan().toString()
     assert "_salt" in plan

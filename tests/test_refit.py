@@ -235,6 +235,20 @@ def test_propose_strata_can_elect_k_max():
         assert lo <= b <= hi, (b, lo, hi)
 
 
+def test_propose_strata_diagnostics_shape_matches_cluster_diagnostics():
+    """Review regression: propose_strata scans one step past k_max for the
+    elbow, but the diagnostics it embeds stop at k_max, the shape
+    cluster_diagnostics reports for the same histogram and k_max."""
+    for modes, k_max in (([20, 52, 85], 8), ([10, 25, 40, 55, 70, 85], 6),
+                         ([40], 3)):
+        c, n = _modal_histogram(modes)
+        got = refit.propose_strata(c, n, k_max=k_max)["diagnostics"]
+        exp = refit.cluster_diagnostics(c, n, k_max=k_max)
+        assert got["k"] == exp["k"] == list(range(1, k_max + 1))
+        assert len(got["wss"]) == len(exp["wss"]) == k_max
+        assert got["wss"] == exp["wss"]
+
+
 def test_kmeans_boundaries_degenerate_matches_kmeans2():
     """Review regression: on a zero-weight histogram (score column
     entirely null) kmeans_boundaries must keep its documented k=2
