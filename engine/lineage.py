@@ -8,89 +8,117 @@ resumability around the expensive stage:
      decode + scrub + LID + PPL + simhash.  Processed in waves of
      part_ids; each wave is written with dynamic partition overwrite
      (idempotent) straight from the scan, with no reshuffle (the scan is
-     already split along the part_id files), and then recorded in a
-     `_state` parquet as one `scored` row per part_id.  Commit rows are
-     built in the JVM (spark.range + explode of literals), so recording a
-     commit never starts a Python worker.  A re-run skips committed
-     partitions; a partially-written wave whose state row never landed
-     is simply overwritten (write-then-commit order).
+     already split along the part_id files), and then recorded in the
+     commit log as one `scored` marker per part_id.  A partially-written
+     wave whose markers never landed is simply overwritten by the next
+     run (write-then-commit order).
   Stage B (cheap, global, idempotent): dup flags need GLOBAL hash groups
      (duplicates cross partitions), so they run over the full scored
      table — but only over ~100-byte rows (checksums + simhash), never
      the audio payload.  Labels (pipeline.label, the composition the
      in-memory pass uses) + lineage_metrics are then a full overwrite,
      safe to repeat.  Once the lineage write has finished, Stage B
-     appends one `labeled` row per committed part_id to the same
-     `_state` log (the same write-then-commit order).
+     records one `labeled` marker per committed part_id (the same
+     write-then-commit order).
+
+The commit log is `<out>/_commits/`, one zero-byte marker file per commit:
+
+    <stage>.<rule_version>.<part_id>.<uuid>     e.g.
+    scored.b81a79d51244aefd.17.0f3c...e1
+
+The name is the whole record; the uuid keeps repeated commits of one part
+distinct, so they count.  The driver creates and lists markers through
+the Hadoop FileSystem API (any fs the output lives on), so recording or
+reading a commit never launches a Spark job.  A name that does not parse
+raises, naming its path, instead of passing for an empty log and
+rescoring everything.  A `_state/` parquet log left by an older engine is
+not read: that output rescores once.
+
+A resume reads the log before it touches the input.  With part_ids
+committed, the pending input is `clips` minus those part_ids, a filter on
+the partition column, so partition pruning leaves only uncommitted part
+dirs to scan, and the remaining part_ids are a `distinct()` over it.  On
+a finished output pruning leaves no file at all: the scan has no
+partitions and the listing runs no Spark job.  A fresh run (empty log,
+or `resume=False`) lists the part_ids of the whole input.
 
 A resume skips Stage B — and returns readers over the committed labels/
 and lineage/ — exactly when, at the current rule_version:
   1. no part_id of the input is left to score, and
-  2. every committed part_id has at least as many `labeled` rows as
-     `scored` rows, and
+  2. every committed part_id has at least as many `labeled` markers as
+     `scored` markers, and
   3. labels/ and lineage/ both exist.
 This is sound because Stage B is a pure function of scored/ plus
 rule_version, and scored/ only changes through Stage A writes that are
-each followed by a `scored` row.  A resume never rewrites a committed
+each followed by a `scored` marker.  A resume never rewrites a committed
 part (it is immutable to Stage A), so any Stage A write after the last
 completed Stage B — a `resume=False` re-run, even an interrupted one —
-leaves that part with more `scored` than `labeled` rows, and the next
+leaves that part with more `scored` than `labeled` markers, and the next
 resume runs Stage B again.  A Stage B that died before its `labeled`
-append leaves the counts short the same way.  Like the Stage A skip, the
-rule assumes a committed part_id's input clips do not change between runs
-at one rule_version.
+markers leaves the counts short the same way.  Like the Stage A skip,
+the rule assumes a committed part_id's input clips do not change between
+runs at one rule_version.
 
-State rows carry config.rule_version(), which hashes the thresholds AND
-the label-determining source bytes (config.label_code_version) AND the
+Markers carry config.rule_version(), which hashes the thresholds AND the
+label-determining source bytes (config.label_code_version) AND the
 scored-schema field names: changing any threshold, any scoring/decision
 code, or the fused UDF's output schema invalidates every checkpoint
 automatically — a resume can never mix label semantics or read a
 mixed-schema scored/ dir.
 
-Every re-read declares its schema (STATE_SCHEMA, scoring.SCORED_SCHEMA,
+Every re-read declares its schema (scoring.SCORED_SCHEMA,
 schema.LABELS_SCHEMA, schema.LINEAGE_SCHEMA), so none pays a schema-
 inference job and part_id comes back as int without a cast.
 """
 
 from __future__ import annotations
 
+import uuid
 from collections import Counter
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import config, schema
 from .operators import decision, pipeline, scoring
 
-STATE_SCHEMA = T.StructType([
-    T.StructField("part_id", T.IntegerType(), False),
-    T.StructField("stage", T.StringType(), False),
-    T.StructField("rule_version", T.StringType(), False),
-])
+STAGES = ("scored", "labeled")
 
 
-def _state_path(output_path: str) -> str:
-    return f"{output_path}/_state"
+def _commit_dir(spark: SparkSession, output_path: str):
+    """(Hadoop FileSystem, Path) of the output's commit log."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(f"{output_path}/_commits")
+    return path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), path
+
+
+def _parse_marker(path: str) -> tuple[str, str, int]:
+    """(stage, rule_version, part_id) of the marker file at `path`."""
+    fields = path.rsplit("/", 1)[-1].split(".")
+    if (len(fields) == 4 and fields[0] in STAGES and fields[2].isdigit()
+            and fields[1] and fields[3]):
+        return fields[0], fields[1], int(fields[2])
+    raise ValueError(f"unparseable commit marker {path!r}: expected "
+                     "<stage>.<rule_version>.<part_id>.<uuid>")
 
 
 def _commit_counts(spark: SparkSession,
                    output_path: str) -> tuple[Counter, Counter]:
-    """(scored, labeled) commit-row counts per part_id at the current
-    rule_version, from one read of the `_state` log.  A log that does not
-    exist yet is empty; any other read failure (a corrupt file) raises
-    rather than passing for an empty log and rescoring everything."""
-    try:
-        st = spark.read.schema(STATE_SCHEMA).parquet(_state_path(output_path))
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return Counter(), Counter()
-    rows = (st.where(F.col("rule_version") == config.rule_version())
-            .select("part_id", "stage").collect())
-    return (Counter(r.part_id for r in rows if r.stage == "scored"),
-            Counter(r.part_id for r in rows if r.stage == "labeled"))
+    """(scored, labeled) marker counts per part_id at the current
+    rule_version, from one listing of the commit log.  A log that does not
+    exist yet is empty."""
+    fs, path = _commit_dir(spark, output_path)
+    counts = {stage: Counter() for stage in STAGES}
+    if not fs.exists(path):
+        return counts["scored"], counts["labeled"]
+    version = config.rule_version()
+    for status in fs.listStatus(path):
+        stage, rule_version, part_id = _parse_marker(
+            status.getPath().toString())
+        if rule_version == version:
+            counts[stage][part_id] += 1
+    return counts["scored"], counts["labeled"]
 
 
 def committed_parts(spark: SparkSession, output_path: str) -> set[int]:
@@ -99,15 +127,12 @@ def committed_parts(spark: SparkSession, output_path: str) -> set[int]:
 
 def _mark_committed(spark: SparkSession, output_path: str, parts: list[int],
                     stage: str = "scored") -> None:
-    # rows built in the JVM: createDataFrame over a Python list
-    # parallelizes pickled rows, which starts a second Python worker
-    # daemon just to write a few ints
-    part_ids = F.array(*(F.lit(int(p)) for p in parts)).cast("array<int>")
-    (spark.range(1, numPartitions=1)
-     .select(F.explode(part_ids).alias("part_id"),
-             F.lit(stage).alias("stage"),
-             F.lit(config.rule_version()).alias("rule_version"))
-     .write.mode("append").parquet(_state_path(output_path)))
+    fs, path = _commit_dir(spark, output_path)
+    jvm = spark.sparkContext._jvm
+    version = config.rule_version()
+    for p in parts:
+        name = f"{stage}.{version}.{int(p)}.{uuid.uuid4().hex}"
+        fs.createNewFile(jvm.org.apache.hadoop.fs.Path(path, name))
 
 
 def _read_labels(spark: SparkSession, output_path: str) -> DataFrame:
@@ -133,12 +158,13 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     scored_path = f"{output_path}/scored"
 
-    all_parts = sorted(r.part_id for r in
-                       clips.select("part_id").distinct().collect())
     n_scored, n_labeled = (_commit_counts(spark, output_path) if resume
                            else (Counter(), Counter()))
     done = set(n_scored)
-    todo = [p for p in all_parts if p not in done]
+    # a filter on the partition column: only uncommitted part dirs are
+    # ever scanned, and with none left the listing runs no job at all
+    pending = clips.where(~F.col("part_id").isin(sorted(done))) if done else clips
+    todo = sorted(r.part_id for r in pending.select("part_id").distinct().collect())
     if done:
         log(f"resume: {len(done)} partitions already scored, {len(todo)} to go")
         if not todo and all(n_labeled[p] >= n for p, n in n_scored.items()):

@@ -29,10 +29,11 @@ def with_decision(df: DataFrame) -> DataFrame:
         reason = F.when(F.col(f"f_{rule}"), F.lit(rule)).otherwise(reason)
     flags_map = F.create_map(
         *chain.from_iterable((F.lit(r), F.col(f"f_{r}")) for r in config.RULE_ORDER))
-    return (df
-            .withColumn("rule_flags", flags_map)
-            .withColumn("drop_reason", reason)
-            .withColumn("keep", F.col("drop_reason").isNull()))
+    return df.withColumns({
+        "rule_flags": flags_map,
+        "drop_reason": reason,
+        "keep": reason.isNull(),
+    })
 
 
 def to_labels(df: DataFrame) -> DataFrame:

@@ -71,8 +71,8 @@ def with_dup_flags(scored: DataFrame) -> DataFrame:
     # so Catalyst plans ONE exchange + two sorts instead of two exchanges
     df = (scored
           .withColumn("_dup_salt", salt)
-          .withColumn("_f_audio_dup", f_audio)
-          .withColumn("f_" + config.RULE_EXACT_DUP, f_exact)
+          .withColumns({"_f_audio_dup": f_audio,
+                        "f_" + config.RULE_EXACT_DUP: f_exact})
           .drop("_dup_salt"))
 
     # --- SimHash band self-join (candidates exact for hamming <= 3) -------

@@ -44,7 +44,6 @@ def with_heuristic_flags(df: DataFrame) -> DataFrame:
     n_chars = F.length(t)
     alpha_ratio = alpha_ratio_col(t)
     cps = chars_per_sec_col(t, dur)
-    df = df.withColumn("alpha_ratio", alpha_ratio).withColumn("chars_per_sec", cps)
 
     # DUR_BOUNDS: graft of `endtime > starttime` (Step1:66-68) + the
     # day-long-gap cap `duration < 1440` min (Step3:96)
@@ -77,13 +76,17 @@ def with_heuristic_flags(df: DataFrame) -> DataFrame:
         | F.coalesce(cps < config.CHARS_PER_SEC_MIN, F.lit(False))
     )
 
-    return (df
-            .withColumn("f_" + config.RULE_DUR_BOUNDS, f_dur)
-            .withColumn("f_" + config.RULE_SR_INVALID, f_sr)
-            .withColumn("f_" + config.RULE_CODEC_INVALID, f_codec)
-            .withColumn("f_" + config.RULE_TXT_EMPTY, f_empty)
-            .withColumn("f_" + config.RULE_TXT_LEN, f_len)
-            .withColumn("f_" + config.RULE_CHAR_RATIO, f_ratio))
+    # one projection: each withColumn call re-analyses the whole plan
+    return df.withColumns({
+        "alpha_ratio": alpha_ratio,
+        "chars_per_sec": cps,
+        "f_" + config.RULE_DUR_BOUNDS: f_dur,
+        "f_" + config.RULE_SR_INVALID: f_sr,
+        "f_" + config.RULE_CODEC_INVALID: f_codec,
+        "f_" + config.RULE_TXT_EMPTY: f_empty,
+        "f_" + config.RULE_TXT_LEN: f_len,
+        "f_" + config.RULE_CHAR_RATIO: f_ratio,
+    })
 
 
 def with_model_flags(df: DataFrame) -> DataFrame:
@@ -118,10 +121,11 @@ def with_model_flags(df: DataFrame) -> DataFrame:
     f_ppl = F.col("ppl_score") > config.PPL_MAX
     f_tox = F.col("tox_severe")
 
-    return (df
-            .withColumn("f_" + config.RULE_UNDECODABLE, f_undec)
-            .withColumn("f_" + config.RULE_DUR_MISMATCH, f_mismatch)
-            .withColumn("f_" + config.RULE_SILENCE, f_silence)
-            .withColumn("f_" + config.RULE_LID_LOWCONF, f_lid)
-            .withColumn("f_" + config.RULE_HIGH_PPL, f_ppl)
-            .withColumn("f_" + config.RULE_TOXIC, f_tox))
+    return df.withColumns({
+        "f_" + config.RULE_UNDECODABLE: f_undec,
+        "f_" + config.RULE_DUR_MISMATCH: f_mismatch,
+        "f_" + config.RULE_SILENCE: f_silence,
+        "f_" + config.RULE_LID_LOWCONF: f_lid,
+        "f_" + config.RULE_HIGH_PPL: f_ppl,
+        "f_" + config.RULE_TOXIC: f_tox,
+    })

@@ -61,8 +61,9 @@ def label(scored: DataFrame, dups: bool = True) -> DataFrame:
     if dups:
         flagged = dedup.with_dup_flags(flagged)
     else:
-        for rule in (config.RULE_EXACT_DUP, config.RULE_NEAR_DUP):
-            flagged = flagged.withColumn(f"f_{rule}", F.lit(False))
+        flagged = flagged.withColumns(
+            {f"f_{rule}": F.lit(False)
+             for rule in (config.RULE_EXACT_DUP, config.RULE_NEAR_DUP)})
     return decision.to_labels(decision.with_decision(flagged))
 
 

@@ -4,6 +4,14 @@ with are written down once.
 
     spark = session.get_or_create("clip-quality-pipeline")
     spark = session.get_or_create("tests", **{"spark.master": "local[4]"})
+
+An engine table (clips, scored/, labels/) has at most config.N_PARTS part
+dirs, so sessions list them in the driver
+(spark.sql.sources.parallelPartitionDiscovery.threshold).  Above the
+threshold Spark lists them with a job of one task per dir, each of which
+deserializes the Hadoop conf; at the default of 32 every 64-part read paid
+for one.  The trade-off: on an object store the driver issues those LIST
+calls one after another instead of in parallel.
 """
 
 from __future__ import annotations
@@ -21,6 +29,9 @@ SHIPPED_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch":
         str(config.ARROW_MAX_RECORDS_PER_BATCH),
+    # part-dir listing in the driver (module docstring)
+    "spark.sql.sources.parallelPartitionDiscovery.threshold":
+        str(config.N_PARTS),
 }
 
 

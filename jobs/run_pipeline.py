@@ -10,12 +10,15 @@ Output layout:
     out/scored/part_id=*/    per-partition checkpoint of the heavy stage
     out/labels/part_id=*/    final keep/drop + scrub labels
     out/lineage/             per-partition metrics (FIXTURES.md Table 3)
-    out/_state/              commit log (part_id, stage, rule_version);
+    out/_commits/            commit log: one zero-byte marker per commit,
+                             named <stage>.<rule_version>.<part_id>.<uuid>;
                              stage is `scored` (a Stage A wave landed) or
-                             `labeled` (Stage B finished over it).  A
-                             resume with nothing new scored since the last
-                             `labeled` rows re-reads labels/ and lineage/
-                             instead of rebuilding them.
+                             `labeled` (Stage B finished over it).  The
+                             driver lists it, so a resume scans only the
+                             uncommitted part dirs of --input, and with
+                             nothing new scored since the last `labeled`
+                             markers re-reads labels/ and lineage/ instead
+                             of rebuilding them (engine/lineage.py).
 """
 
 from __future__ import annotations

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -450,6 +452,19 @@ def test_adpcm_pure_paths_match_audioop():
         want_dec, _ = audioop.adpcm2lin(want_enc, 2, None)
         assert np.array_equal(audio_core._adpcm_decode_py(want_enc),
                               np.frombuffer(want_dec, dtype=np.int16))
+
+
+def test_adpcm_pure_paths_match_golden_stream():
+    """The same property without audioop: a checked-in pair made by the
+    stdlib C encoder (tools/make_adpcm_golden.py, Python 3.11) pins both
+    pure-Python recursions bit for bit on Python 3.13+ too.  The signal
+    drives the step index to both ends and valpred to both rails."""
+    golden = np.load(os.path.join(os.path.dirname(__file__), "data",
+                                  "adpcm_ima_golden.npz"))
+    adpcm = golden["adpcm"].tobytes()
+    assert audio_core._adpcm_encode_py(golden["pcm"]) == adpcm
+    assert np.array_equal(audio_core._adpcm_decode_py(adpcm),
+                          golden["decoded"])
 
 
 def test_adpcm_roundtrip_snr_and_compression():

@@ -5,7 +5,10 @@ on a committed output is a no-op unless something was scored since."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import uuid
+from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -39,6 +42,48 @@ def _copy(committed, tmp_path) -> str:
     out = str(tmp_path / "out")
     shutil.copytree(committed[0], out)
     return out
+
+
+@contextmanager
+def _spark_jobs(spark):
+    """Yields a list that holds, once the block exits, the ids of the
+    Spark jobs it ran."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"test-resume-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+        # job events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _markers(out: str) -> list[str]:
+    return [n for n in os.listdir(os.path.join(out, "_commits"))
+            if not n.endswith(".crc")]
+
+
+def _parts_to_score(spark, clips, out, monkeypatch) -> list[int]:
+    """The part_ids a resume on `out` sends to Stage A; its first wave
+    stops the run before anything is scored."""
+    class Rescoring(Exception):
+        pass
+
+    rescored = []
+
+    def record(wave_df):
+        rescored.extend(r.part_id for r in
+                        wave_df.select("part_id").distinct().collect())
+        raise Rescoring
+
+    monkeypatch.setattr(scoring, "score_clips", record)
+    with pytest.raises(Rescoring):
+        lineage.run_checkpointed(spark, clips, out, wave_size=64)
+    return sorted(rescored)
 
 
 def _count_stage_b(monkeypatch) -> list:
@@ -81,7 +126,7 @@ def test_partial_then_resume_identical(spark, committed, tmp_path):
 
 def test_commit_rows_need_no_python_worker(spark, committed, tmp_path,
                                           monkeypatch):
-    """Commit rows are built in the JVM: with createDataFrame (which ships
+    """Commits start no Python worker: with createDataFrame (which ships
     Python rows through a worker) unavailable, a fresh run and a resume
     that labels again both complete, with the same labels."""
     from pyspark.sql import SparkSession
@@ -167,41 +212,130 @@ def test_rule_version_change_rescores_everything(spark, committed, tmp_path,
     _, clips, _, _ = committed
     out = _copy(committed, tmp_path)
     monkeypatch.setattr(config, "rule_version", lambda: "different!")
-
-    class Rescoring(Exception):
-        pass
-
-    rescored = []
-
-    def record(wave_df):
-        rescored.extend(r.part_id for r in
-                        wave_df.select("part_id").distinct().collect())
-        raise Rescoring
-
-    monkeypatch.setattr(scoring, "score_clips", record)
-    with pytest.raises(Rescoring):
-        lineage.run_checkpointed(spark, clips, out, wave_size=64)
-    assert sorted(rescored) == list(range(64))
+    assert _parts_to_score(spark, clips, out, monkeypatch) == list(range(64))
 
 
 def test_corrupt_state_raises_instead_of_rescoring(spark, committed, tmp_path,
                                                    monkeypatch):
+    """A commit marker whose name does not parse raises, naming its path,
+    instead of passing for an empty log and rescoring everything."""
     _, clips, _, _ = committed
     out = _copy(committed, tmp_path)
-    state = os.path.join(out, "_state")
-    for name in os.listdir(state):
-        path = os.path.join(state, name)
-        if name.endswith(".crc"):
-            os.remove(path)
-        elif name.endswith(".parquet"):
-            with open(path, "wb") as f:
-                f.write(b"not a parquet file")
 
     def rescore(wave_df):
         raise AssertionError("a corrupt commit log read as an empty one")
 
     monkeypatch.setattr(scoring, "score_clips", rescore)
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        lineage.committed_parts(spark, out)
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        lineage.run_checkpointed(spark, clips, out, wave_size=64)
+    version = config.rule_version()
+    for name in ("notes.txt", f"scored.{version}.7",
+                 f"scored.{version}.seven.{uuid.uuid4().hex}",
+                 f"merged.{version}.7.{uuid.uuid4().hex}"):
+        marker = os.path.join(out, "_commits", name)
+        open(marker, "w").close()
+        with pytest.raises(ValueError, match=re.escape(marker)):
+            lineage.committed_parts(spark, out)
+        with pytest.raises(ValueError, match=re.escape(marker)):
+            lineage.run_checkpointed(spark, clips, out, wave_size=64)
+        os.remove(marker)
+
+
+def test_noop_resume_runs_no_spark_job(spark, committed, tmp_path):
+    """A resume on a finished 64-part output lists the commit log through
+    the driver's FileSystem, finds nothing pending by partition pruning
+    (a scan over no files) and lists labels/ and lineage/ in the driver:
+    no Spark job at all."""
+    _, clips, labels_a, metrics_a = committed
+    out = _copy(committed, tmp_path)
+    seen = []
+    with _spark_jobs(spark) as jobs:
+        labels, metrics = lineage.run_checkpointed(
+            spark, clips, out, wave_size=64, log=seen.append)
+    assert jobs == [], jobs
+    assert any("Stage B skipped" in s for s in seen), seen
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
+
+
+def test_fresh_run_commits_after_data_without_spark_jobs(
+        spark, committed, tmp_path, monkeypatch):
+    """Every marker lands after the data it commits (the part dirs of its
+    wave in scored/; for `labeled`, labels/ and lineage/), and recording or
+    reading commits runs no Spark job: a fresh two-wave run over the 64
+    parts runs exactly 13 jobs."""
+    _, clips, labels_a, metrics_a = committed
+    out = str(tmp_path / "fresh")
+    real = lineage._mark_committed
+    recorded = []
+
+    def mark_after_data(spark_, output_path, parts, stage="scored"):
+        data = "scored" if stage == "scored" else "labels"
+        for p in parts:
+            assert os.path.isdir(os.path.join(
+                output_path, data, f"part_id={p}")), (stage, p)
+        if stage == "labeled":
+            assert os.path.exists(os.path.join(
+                output_path, "lineage", "_SUCCESS"))
+        with _spark_jobs(spark_) as jobs:
+            real(spark_, output_path, parts, stage)
+        assert jobs == [], jobs
+        recorded.append((stage, len(parts)))
+
+    monkeypatch.setattr(lineage, "_mark_committed", mark_after_data)
+    with _spark_jobs(spark) as jobs:
+        labels, metrics = lineage.run_checkpointed(spark, clips, out,
+                                                   wave_size=32)
+    assert recorded == [("scored", 32), ("scored", 32), ("labeled", 64)]
+    assert len(jobs) == 13, jobs
+    assert len(_markers(out)) == 128
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
+
+
+def test_partial_resume_scans_only_uncommitted_parts(spark, committed,
+                                                     clips_t1, tmp_path):
+    """A run died after committing parts 0..47: the resume scores exactly
+    parts 48..63, and neither its discovery nor its waves read a committed
+    part's input files (they are garbage here, so any read would fail)."""
+    _, _, labels_a, metrics_a = committed
+    out = _copy(committed, tmp_path)
+    for name in _markers(out):
+        if int(name.split(".")[2]) >= 48:
+            os.remove(os.path.join(out, "_commits", name))
+    src = str(tmp_path / "clips")
+    shutil.copytree(clips_t1[0], src)
+    clips = pipeline.read_clips(spark, src)
+    for p in range(48):
+        part_dir = os.path.join(src, f"part_id={p}")
+        for name in os.listdir(part_dir):
+            path = os.path.join(part_dir, name)
+            if name.endswith(".crc"):
+                os.remove(path)
+            else:
+                with open(path, "r+b") as f:
+                    f.write(b"\0" * os.path.getsize(path))
+
+    seen = []
+    labels, metrics = lineage.run_checkpointed(spark, clips, out,
+                                               wave_size=64, log=seen.append)
+    assert any("48 partitions already scored, 16 to go" in s for s in seen), seen
+    scored = lineage._commit_counts(spark, out)[0]
+    assert scored == {p: 1 for p in range(64)}
+    labels_b, metrics_b = _frames(labels, metrics)
+    pd.testing.assert_frame_equal(labels_a, labels_b)
+    pd.testing.assert_frame_equal(metrics_a, metrics_b)
+
+
+def test_old_state_log_is_ignored(spark, committed, tmp_path, monkeypatch):
+    """A `_state/` parquet log left by an older engine is not read: with no
+    `_commits/`, the output counts as uncommitted and rescores in full."""
+    _, clips, _, _ = committed
+    out = _copy(committed, tmp_path)
+    shutil.rmtree(os.path.join(out, "_commits"))
+    (spark.range(64).selectExpr("cast(id as int) as part_id",
+                                "'scored' as stage",
+                                f"'{config.rule_version()}' as rule_version")
+     .write.parquet(os.path.join(out, "_state")))
+    assert lineage.committed_parts(spark, out) == set()
+    assert _parts_to_score(spark, clips, out, monkeypatch) == list(range(64))
