@@ -1,39 +1,27 @@
 #!/usr/bin/env python
-"""Bench harness (driver contract + north_rule scaling evidence).
+"""Driver bench: `python bench.py` prints ONE JSON line timing the fused
+clips pass (best of 3, on a cached synthetic table of
+$SPARK_GRAFT_BENCH_CLIPS clips, default 24000) plus every `queries()`
+entry of `__spark_entry__.py` against $SPARK_GRAFT_SF_DIR.
 
-Default mode (what the per-round driver runs):
-    python bench.py
-runs every `queries()` entry from `__spark_entry__.py` against
-`$SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1) on
-`local[$SPARK_GRAFT_CPUS]` (default 32), plus the fused clips
-quality-filter pipeline (the engine's headline workload, BASELINE.json
-north_star) on a cached deterministic synthetic clips table, and prints
-ONE JSON line:
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ..., "clips_per_sec": ...}
-
-Scaling mode (north_rule: throughput at two cluster sizes; sandbox proxy
-is two parallelism levels on the same input):
-    python bench.py --scaling [--levels 8,32] [--n-clips 24000]
-spawns one subprocess per level (fresh JVM each — honest cold plans),
-each timing ONLY the fused clips pipeline, and writes
-BENCH/BASELINE.md with clips/sec at both levels + scaling efficiency.
-
-    python bench.py --level 8 --n-clips 24000
-is the single-level worker (also usable standalone).
+The session runs at local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may use) with $SPARK_GRAFT_DRIVER_MEM of driver memory (default: a
+quarter of MemAvailable).  It refuses to start a JVM whose driver memory
+exceeds the RAM, or when an uncached table would not fit the temp dir.
+First-touch probes before and after the run stamp `valid`.  The repo
+benchmark is perfbench/, which imports this module's probe.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import subprocess
+import shutil
 import sys
+import tempfile
 import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 BENCH_SEED = 20260816
 CHUNK = 4000  # fixture-generation chunk (keeps numpy arrays small)
@@ -69,7 +57,7 @@ def _split_bytes(cpus: int, n_clips: int) -> int:
     return max(8 << 20, min(128 << 20, total // (4 * cpus)))
 
 
-def _build_spark(cpus: int, n_clips: int = 24000):
+def _build_spark(cpus: int, n_clips: int, driver_mem: str):
     # importing engine pins one BLAS/OpenMP thread per Python UDF worker
     # (engine/__init__.py) before the JVM starts: with K concurrent
     # workers, default numpy thread pools (ncpus each) oversubscribe the
@@ -86,7 +74,7 @@ def _build_spark(cpus: int, n_clips: int = 24000):
         # multi-TB table never hits — target ~4 scan splits per core
         "spark.sql.files.maxPartitionBytes": _split_bytes(cpus, n_clips),
         "spark.sql.files.openCostInBytes": "1m",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": driver_mem,
         "spark.ui.enabled": "false",
     })
 
@@ -94,20 +82,25 @@ def _build_spark(cpus: int, n_clips: int = 24000):
 GROUP = 12_000  # clips per append-write group (~0.5 GB of payload)
 
 
-def _clips_table(spark, n_clips: int) -> str:
-    """Deterministic bench clips table, cached on disk keyed by
-    (n, seed, fixture version).  Written in append groups so driver memory
-    stays bounded and each partition directory holds several files (the
-    multi-file layout a real multi-TB table has)."""
-    import shutil
-    import tempfile
-
+def _table_path(n_clips: int) -> str:
+    """Where the bench clips table is cached, keyed by (n, seed, fixture
+    version); it is complete once `_GEN_DONE` exists in it."""
     from engine import fixtures
 
-    path = os.path.join(
+    return os.path.join(
         tempfile.gettempdir(),
         f"spark_graft_bench_clips_{n_clips}_{BENCH_SEED}"
         f"_v{fixtures.FIXTURES_VERSION}")
+
+
+def _clips_table(spark, n_clips: int) -> str:
+    """Deterministic bench clips table, cached on disk at `_table_path`.
+    Written in append groups so driver memory stays bounded and each
+    partition directory holds several files (the multi-file layout a real
+    multi-TB table has)."""
+    from engine import fixtures
+
+    path = _table_path(n_clips)
     done = os.path.join(path, "_GEN_DONE")
     if not os.path.exists(done):
         import pandas as pd
@@ -127,11 +120,6 @@ def _clips_table(spark, n_clips: int) -> str:
     return path
 
 
-def _force(df) -> None:
-    """Force full computation without a driver-side collect."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def _time_clips_pipeline(spark, n_clips: int) -> dict:
     from engine.operators import pipeline
 
@@ -149,59 +137,85 @@ def _time_clips_pipeline(spark, n_clips: int) -> dict:
 FAULT_GBPS_HEALTHY = 0.5  # below this, wall-clock numbers are host noise
 
 
-def _warn_if_host_collapsed(fault_gbps: float) -> None:
-    if fault_gbps < FAULT_GBPS_HEALTHY:
-        print(f"WARNING: host first-touch page-fault throughput is "
-              f"{fault_gbps} GB/s (healthy guests measure >1): fresh "
-              f"allocations are hypervisor-bound and the timings below "
-              f"are NOT evidence about the engine (see BENCH/BASELINE.md"
-              f" 'Host page-fault collapse')", file=sys.stderr)
+class HostError(RuntimeError):
+    """The host cannot hold the run; the message says what to change."""
 
 
-def run_default(cpus: int, sf_dir: str, n_clips: int) -> dict:
+def meminfo() -> dict[str, int]:
+    """/proc/meminfo in bytes."""
+    with open("/proc/meminfo") as f:
+        return {k: int(v.split()[0]) * 1024
+                for k, v in (line.split(":", 1) for line in f)}
+
+
+def default_driver_memory(ram_available: int) -> str:
+    """A quarter of the free RAM, whole GiB, at least 1: perfbench's rule
+    without its 4 GiB cap, since this table is larger."""
+    return f"{max(1, ram_available // 4 // 2**30)}g"
+
+
+def jvm_bytes(size: str) -> int:
+    """A JVM size ("24g", "512m", "1024k"; a bare number is MiB, as Spark
+    reads spark.driver.memory) in bytes."""
+    s = size.strip().lower().removesuffix("b")
+    units = {"k": 1, "m": 2, "g": 3, "t": 4}
+    if s[-1:] in units:
+        return int(s[:-1]) * 1024 ** units[s[-1]]
+    return int(s) * 2**20
+
+
+def check_host(driver_mem: str, ram_total: int,
+               table_bytes: int, free_disk: int) -> None:
+    """Raise HostError before the JVM starts when the driver memory exceeds
+    the RAM or the bench table still to be written (`table_bytes`, 0 when
+    cached) exceeds the temp dir's free space."""
+    if jvm_bytes(driver_mem) > ram_total:
+        raise HostError(
+            f"driver memory {driver_mem} exceeds the host's "
+            f"{ram_total / 2**30:.1f} GiB of RAM: lower SPARK_GRAFT_DRIVER_MEM"
+            " or unset it to take a quarter of the free RAM")
+    if table_bytes > free_disk:
+        raise HostError(
+            f"the bench table needs ~{table_bytes / 2**30:.1f} GiB but "
+            f"{tempfile.gettempdir()} has {free_disk / 2**30:.1f} GiB free: "
+            "lower SPARK_GRAFT_BENCH_CLIPS, free disk space, or point TMPDIR "
+            "at a larger disk")
+
+
+def run_default(cpus: int, sf_dir: str, n_clips: int, driver_mem: str) -> dict:
     fault_gbps = host_first_touch_gbps()
-    _warn_if_host_collapsed(fault_gbps)
-    spark = _build_spark(cpus, n_clips)
+    spark = _build_spark(cpus, n_clips, driver_mem)
     import __spark_entry__ as entry_mod
 
     per_query: dict[str, float] = {}
     total = 0.0
-    # best of 3 + median recorded: the first pass pays one-time JVM JIT +
-    # Python-worker spin-up, and this host's single-run swings are >2x
-    # (BENCH/BASELINE.md "Repeatability") — round 4's driver file recorded
-    # a 29% fused "regression" that neither the checked-in snapshot nor a
-    # re-run reproduced, from exactly one loud window at best-of-2.  The
-    # headline stays the min (steady-state cost a long job sees); the
-    # median + all runs ship alongside so noise is adjudicable in-file.
+    # best of 3, median and all runs recorded: the first pass pays JVM JIT
+    # and Python-worker spin-up, and single runs swing >2x on a shared host
     fused_runs = [_time_clips_pipeline(spark, n_clips) for _ in range(3)]
     clips = min(fused_runs, key=lambda r: r["sec"])
     fused_secs = sorted(r["sec"] for r in fused_runs)
     per_query["clips_pipeline_fused"] = clips["sec"]
     total += clips["sec"]
 
-    # one-time oracle-prep outside the per-query timings: the
-    # content-addressed side parquets (labels/flags/mel/speaker) are shared
-    # fixture state for the DuckDB twins — their write runs the fused
-    # pipeline over the small ENTRY table (a different input than the
-    # n_clips fixture timed above), so charging it to whichever timed
-    # query touches it first misstated that operator's cost.  The warm is
-    # reported separately below (oracle_prep_sec, excluded from `value`);
-    # on every later invocation it is a skip-if-fresh no-op and reads 0.
+    # the DuckDB twins' side parquets are shared fixture state, written once
+    # (a no-op when fresh): timed apart, not charged to the first query
     t0 = time.time()
     entry_mod.warm_side_tables(spark, sf_dir)
     oracle_prep = round(time.time() - t0, 3)
 
     for name, fn in sorted(entry_mod.queries().items()):
         t0 = time.time()
-        df = fn(spark, sf_dir)
-        _force(df)
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
         per_query[name] = round(dt, 3)
         total += dt
 
     spark.stop()
     fault_end = host_first_touch_gbps()
-    _warn_if_host_collapsed(fault_end)
+    # the collapse hits mid-run, so one pre-run probe could pass poisoned
+    # timings
+    fault_min = min(fault_gbps, fault_end)
+    valid = fault_min >= FAULT_GBPS_HEALTHY
     return {
         "metric": "fused clips quality-filter pass + full operator-inventory suite, wall sec",
         "value": round(total, 3),
@@ -214,192 +228,37 @@ def run_default(cpus: int, sf_dir: str, n_clips: int) -> dict:
         "clips_fused_runs_sec": fused_secs,
         "clips_fused_median_sec": fused_secs[len(fused_secs) // 2],
         "clips_per_sec": clips["clips_per_sec"],
-        # min of a probe BEFORE and one AFTER the timed section: the
-        # documented collapse mode hits mid-run, so a single pre-run
-        # sample could stamp poisoned timings as healthy
-        "host_first_touch_gbps": min(fault_gbps, fault_end),
+        "host_first_touch_gbps": fault_min,
         "host_first_touch_gbps_probes": [fault_gbps, fault_end],
+        "valid": valid,
+        "invalid_reason": None if valid else (
+            f"host first-touch probe read {fault_min} GB/s, below "
+            f"{FAULT_GBPS_HEALTHY}"),
     }
-
-
-def run_level(cpus: int, n_clips: int, repeats: int = 3) -> dict:
-    """Single-level worker: fused clips pipeline only, best of `repeats`.
-    The host probe brackets the timed section (start AND end) — the
-    documented collapse mode hits MID-run, so a single pre-run sample can
-    stamp poisoned timings as healthy; each run dict also carries the
-    probe taken right after it."""
-    fault_start = host_first_touch_gbps()
-    _warn_if_host_collapsed(fault_start)
-    spark = _build_spark(cpus, n_clips)
-    results = []
-    probes = [fault_start]
-    for _ in range(repeats):
-        r = _time_clips_pipeline(spark, n_clips)
-        g = host_first_touch_gbps()
-        probes.append(g)
-        results.append({**r, "host_first_touch_gbps": g})
-    spark.stop()
-    _warn_if_host_collapsed(min(probes))
-    best = min(results, key=lambda r: r["sec"])
-    return {"cpus": cpus, "n_clips": n_clips, "runs": results, **best,
-            # AFTER **best so the worst (min) probe wins over the
-            # best-run's own sample — the conservative adjudication value
-            "host_first_touch_gbps": min(probes),
-            "host_first_touch_gbps_probes": probes}
-
-
-def run_scaling(levels: list[int], n_clips: int, rounds: int = 2) -> dict:
-    # pre-generate the table once so no level pays generation cost
-    spark = _build_spark(4, n_clips)
-    _clips_table(spark, n_clips)
-    spark.stop()
-
-    # interleave the levels across rounds: host noise on this box swings
-    # single measurements by >2x on a minutes timescale, so measuring each
-    # level in one contiguous block can hand one level a quiet window and
-    # the other a loud one; alternating blocks + best-of gives both levels
-    # a shot at the quiet windows
-    all_runs: dict[int, list] = {lv: [] for lv in levels}
-    for r in range(rounds):
-        order = sorted(levels, reverse=(r % 2 == 1))
-        for lv in order:
-            proc = subprocess.run(
-                [sys.executable, os.path.join(REPO, "bench.py"),
-                 "--level", str(lv), "--n-clips", str(n_clips)],
-                capture_output=True, text=True, check=True, cwd=REPO)
-            line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-            all_runs[lv].extend(json.loads(line)["runs"])
-
-    out = {}
-    for lv in levels:
-        best = min(all_runs[lv], key=lambda x: x["sec"])
-        # per-run probes ride along in each run dict; surface the worst
-        # one per level so the scaling artifact itself is adjudicable
-        # under the BASELINE.md host-collapse rule
-        probes = [r["host_first_touch_gbps"] for r in all_runs[lv]
-                  if "host_first_touch_gbps" in r]
-        out[lv] = {"cpus": lv, "n_clips": n_clips,
-                   "runs": all_runs[lv], **best,
-                   "host_first_touch_gbps": min(probes) if probes else None}
-
-    lo, hi = min(levels), max(levels)
-    t_lo, t_hi = out[lo]["sec"], out[hi]["sec"]
-    factor = hi / lo
-    eff = (t_lo / t_hi) / factor
-    probes = [v["host_first_touch_gbps"] for v in out.values()
-              if v.get("host_first_touch_gbps") is not None]
-    report = {
-        "levels": {str(k): v for k, v in out.items()},
-        "speedup": round(t_lo / t_hi, 3),
-        "scaling_efficiency": round(eff, 3),
-        "factor": factor,
-        "gate": ">=0.8 (north_rule; N vs 4N proxy = local[%d] vs local[%d])" % (lo, hi),
-        "host_first_touch_gbps": min(probes) if probes else None,
-    }
-    _write_baseline_md(report, n_clips)
-    return report
-
-
-MANUAL_MARKER = "<!-- manual notes below: preserved across bench.py --scaling rewrites -->"
-
-
-def _write_baseline_md(report: dict, n_clips: int) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # Everything from MANUAL_MARKER down is hand-written narrative
-    # (secondary windows, round history); a --scaling rewrite regenerates
-    # only the auto section above it.
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    manual_tail = ""
-    if os.path.exists(path):
-        prev = open(path).read()
-        if MANUAL_MARKER in prev:
-            manual_tail = prev[prev.index(MANUAL_MARKER):]
-    lv = report["levels"]
-    keys = sorted(int(k) for k in lv)
-    lines = [
-        "# BENCH/BASELINE.md — fused clips quality-filter pipeline, scaling evidence",
-        "",
-        "north_rule requires throughput at two cluster sizes (N and 4N executors)",
-        "with scaling efficiency >= 0.8.  No real cluster exists in this sandbox",
-        "(driver instruction), so the proxy is the same job, same input, at two",
-        f"local parallelism levels: local[{keys[0]}] vs local[{keys[-1]}].",
-        "",
-        "Level choice: the sandbox advertises 32 vCPUs but a pure-CPU",
-        "multiprocess microbenchmark measures only ~2.8x aggregate from 8->32",
-        "busy processes (host overcommit / phantom load avg ~14 on an idle VM,",
-        "plus a shared memory bus that a real cluster does not share — each",
-        "executor node brings its own), while 4->16 measures ~3.8x of 4x.  The",
-        f"levels local[{keys[0]}] vs local[{keys[-1]}] sit inside the window",
-        "where the box's own limits are not the binding constraint, so the",
-        "measurement reflects the engine.",
-        "",
-        f"Input: deterministic synthetic clips table, {n_clips} clips with mixed-codec (pcm + stand-in-compressed) audio",
-        f"payloads (engine/fixtures.py, profile='bench', seed={BENCH_SEED}).",
-        "Timed span: fused pass scan -> heuristics || decode+LID+perplexity UDF",
-        "-> scrub -> near-dup -> decision -> labels (noop sink, no driver collect).",
-        "Levels measured in interleaved rounds (2-8-8-2 ordering) so host-noise",
-        "windows hit both levels alike; best run per level, fresh JVM per block.",
-        "",
-        "| parallelism | wall sec | clips/sec | worst host fault probe GB/s |",
-        "|---|---|---|---|",
-    ]
-    for k in keys:
-        r = lv[str(k)]
-        lines.append(f"| local[{k}] | {r['sec']} | {r['clips_per_sec']} "
-                     f"| {r.get('host_first_touch_gbps')} |")
-    lines += [
-        "",
-        f"**speedup {keys[0]}->{keys[-1]} cores: {report['speedup']}x**",
-        f"**scaling efficiency: {report['scaling_efficiency']}** "
-        f"(gate >= 0.8 over a {report['factor']:.0f}x size step)",
-        "",
-        "Host health: every run carries a first-touch page-fault probe;",
-        "a worst probe below ~0.5 GB/s means the measurement is",
-        "hypervisor-bound, not engine evidence (see 'Host page-fault",
-        "collapse' below the manual marker).",
-        "",
-        "Reference baseline: none published (single-threaded R, see SURVEY.md §6);",
-        "the reference's O(n·m) driver loops cap it at ~10^4-10^5 episodes, so any",
-        "distributed throughput at all exceeds it; the gate that matters is the",
-        "scaling efficiency above plus the oracle F1 gate in tests/.",
-        "",
-    ]
-    if manual_tail:
-        lines.append(manual_tail)
-    with open(path, "w") as f:
-        f.write("\n".join(lines))
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--level", type=int, default=None)
-    # 2,8 = the N-vs-4N window where the single box is not the bottleneck:
-    # on a real cluster each executor node brings its own memory bus, but on
-    # this one box the shared bus + host overcommit bind above ~8-16 busy
-    # vCPUs (pure-CPU microbenchmark: 4->16 procs scale 3.8x, 8->32 only
-    # 2.8x), so higher levels measure the sandbox, not the engine
-    ap.add_argument("--levels", default="2,8")
-    ap.add_argument("--n-clips", type=int, default=None)
-    args = ap.parse_args()
-    if args.n_clips is None:
-        base = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "24000"))
-        # scaling mode needs a longer timed span so fixed per-job costs
-        # (scheduling, worker spin-up, cache-fill barrier) don't read as
-        # serial fraction
-        args.n_clips = base * 6 if args.scaling else base
-
-    if args.scaling:
-        report = run_scaling([int(x) for x in args.levels.split(",")], args.n_clips)
-        print(json.dumps(report))
-        return 0
-    if args.level is not None:
-        print(json.dumps(run_level(args.level, args.n_clips)))
-        return 0
-
+    if sys.argv[1:]:
+        print("bench: takes no arguments; size the run with the "
+              "SPARK_GRAFT_* variables in the module docstring",
+              file=sys.stderr)
+        return 2
+    n_clips = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "24000"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    print(json.dumps(run_default(cpus, sf_dir, args.n_clips)))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+    mem = meminfo()
+    driver_mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                  or default_driver_memory(mem["MemAvailable"]))
+    cached = os.path.exists(os.path.join(_table_path(n_clips), "_GEN_DONE"))
+    try:
+        check_host(driver_mem, mem["MemTotal"],
+                   0 if cached else n_clips * BYTES_PER_CLIP,
+                   shutil.disk_usage(tempfile.gettempdir()).free)
+    except HostError as e:
+        print(f"bench: {e}", file=sys.stderr)
+        return 2
+    print(json.dumps(run_default(cpus, sf_dir, n_clips, driver_mem)))
     return 0
 
 

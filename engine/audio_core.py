@@ -406,7 +406,7 @@ def decode_payload(payload: bytes | None, canon_codec: str | None):
 
 def analyze(payload: bytes | None, sr_hz: int | None,
             canon_codec: str | None = "pcm_s16le"):
-    """Decode ONCE -> (undecodable, features tuple, frame_features tuple).
+    """Decode ONCE -> (undecodable, features, frame_features).
 
     `undecodable` is True iff a payload was present but could not be
     decoded under its codec (missing decoder or rejected bytes) — the
@@ -414,7 +414,33 @@ def analyze(payload: bytes | None, sr_hz: int | None,
     feature families for every clip; decoding (and float32-casting) the
     payload once here instead of once per family halves the UDF's memory
     traffic on the ~100 KB payloads — the dominant per-row cost at corpus
-    scale."""
+    scale.
+
+    features = (decoded_dur_ms, n_samples, rms, clipping_ratio,
+    pcm_checksum): all None when there is no payload or it decodes to no
+    samples; decoded_dur_ms alone is None when sr_hz is unusable.
+    pcm_checksum is blake2b-128 over the decoded samples, so the same audio
+    dups across codecs.
+
+    frame_features = (silence_ratio, spectral_flatness, mel_profile), the
+    frame-level analysis — the audio graft of the reference's
+    stay-point/stationary-episode detection (a trajectory that doesn't
+    move ~ a clip that carries no signal energy,
+    Step4-Spatial-Inconsistency.R:5-49 adjacent-distance scan):
+
+      * silence_ratio: fraction of 25 ms frames (10 ms hop) whose rms is
+        below SILENCE_FRAME_RMS of full scale — input to the SILENCE rule;
+      * spectral_flatness: mean per-frame geometric/arithmetic-mean ratio
+        of the magnitude spectrum (0 = pure tone, 1 = white noise);
+      * mel_profile: N_MELS-point log-mel spectral summary (mean over
+        frames) — the clip's compact audio fingerprint, the
+        feature-extraction output a downstream audio-similarity or
+        train-data pipeline consumes.
+
+    All None when there are no samples or fewer than one frame's worth.
+    Frame geometry uses FALLBACK_SR when sr_hz is not usable, so the
+    features stay defined for rows whose SR_INVALID rule fires first.
+    """
     pcm = decode_payload(payload, canon_codec)
     if pcm is None or pcm.size == 0:
         return (payload is not None,
@@ -425,25 +451,14 @@ def analyze(payload: bytes | None, sr_hz: int | None,
             _frame_features_pcm(pcm, x, sr_hz))
 
 
-def features(payload: bytes | None, sr_hz: int | None):
-    """-> (decoded_dur_ms, n_samples, rms, clipping_ratio, pcm_checksum).
-
-    All None when the payload is missing/undecodable or sr is unusable.
-
-    Memory-traffic-aware: this runs once per clip over the whole corpus, so
-    every avoidable full-payload copy matters (float32 accumulation instead
-    of float64, boolean compare instead of abs+astype, hash over a
-    memoryview of the payload instead of a re-serialized sample copy).
-    blake2b-128 replaces md5: ~1.5x faster, and 128 bits keeps the
-    exact-dup equality classes collision-free at 10^12 rows.
-    """
-    pcm = decode_pcm_s16le(payload)
-    if pcm is None or pcm.size == 0:
-        return None, None, None, None, None
-    return _features_pcm(pcm, pcm.astype(np.float32), sr_hz)
-
-
 def _features_pcm(pcm: np.ndarray, x: np.ndarray, sr_hz: int | None):
+    """analyze()'s clip-level features.  Memory-traffic-aware: this runs
+    once per clip over the whole corpus, so every avoidable full-payload
+    copy matters (float32 accumulation instead of float64, boolean compare
+    instead of abs+astype, hash over the decoded buffer instead of a
+    re-serialized sample copy).  blake2b-128 replaces md5: ~1.5x faster,
+    and 128 bits keeps the exact-dup equality classes collision-free at
+    10^12 rows."""
     n = int(pcm.size)
     # einsum, not np.dot: the per-clip reductions here are too small for
     # BLAS threading to pay off, and interleaved with the fft/hash work
@@ -498,33 +513,6 @@ def _mel_filterbank(sr: int, n_fft: int, n_mels: int = N_MELS) -> np.ndarray:
         if c > b:
             fb[i, b:c] = (c - np.arange(b, c)) / (c - b)
     return fb
-
-
-def frame_features(payload: bytes | None, sr_hz: int | None):
-    """-> (silence_ratio, spectral_flatness, mel_profile).
-
-    Frame-level analysis of the decoded payload — the audio graft of the
-    reference's stay-point/stationary-episode detection (a trajectory that
-    doesn't move ~ a clip that carries no signal energy,
-    Step4-Spatial-Inconsistency.R:5-49 adjacent-distance scan):
-
-      * silence_ratio: fraction of 25 ms frames (10 ms hop) whose rms is
-        below SILENCE_FRAME_RMS of full scale — input to the SILENCE rule;
-      * spectral_flatness: mean per-frame geometric/arithmetic-mean ratio
-        of the magnitude spectrum (0 = pure tone, 1 = white noise);
-      * mel_profile: N_MELS-point log-mel spectral summary (mean over
-        frames) — the clip's compact audio fingerprint, the
-        feature-extraction output a downstream audio-similarity or
-        train-data pipeline consumes.
-
-    All None when the payload is undecodable or shorter than one frame.
-    Frame geometry uses FALLBACK_SR when sr_hz is not usable, so the
-    features stay defined for rows whose SR_INVALID rule fires first.
-    """
-    pcm = decode_pcm_s16le(payload)
-    if pcm is None or pcm.size == 0:
-        return None, None, None
-    return _frame_features_pcm(pcm, pcm.astype(np.float32), sr_hz)
 
 
 def _frame_features_pcm(pcm: np.ndarray, x: np.ndarray, sr_hz: int | None):

@@ -7,9 +7,10 @@ Ship (north_rule):
         --stream-labels /path/stream_out/labels --output /path/reconciled
 
 Recomputes the global batch answer over the accumulated clips table,
-writes it as the corrected labels, and prints/writes the diff vs the
-streaming labels.  Exits non-zero if any flip is NOT duplicate-rule
-related (that would mean nondeterminism, not late dup discovery).
+writes it as the corrected labels, and prints/writes the diff between the
+labels it wrote and the streaming labels.  Exits non-zero if any flip is
+NOT duplicate-rule related (that would mean nondeterminism, not late dup
+discovery).
 """
 
 from __future__ import annotations
@@ -27,16 +28,20 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from engine import session
+    from engine import schema, session
+    from engine.operators import pipeline
     from engine.streaming import reconcile
 
     spark = session.get_or_create("clip-quality-reconcile")
 
-    stream_labels = spark.read.parquet(args.stream_labels)
-    corrected, diff = reconcile.reconcile(spark, args.clips, stream_labels)
-
-    (corrected.repartition("part_id").write.mode("overwrite")
-     .partitionBy("part_id").parquet(f"{args.output}/labels"))
+    with pipeline.labeled(pipeline.read_clips(spark, args.clips)) as labels:
+        (labels.repartition("part_id").write.mode("overwrite")
+         .partitionBy("part_id").parquet(f"{args.output}/labels"))
+    # diff the labels just written, as Stage B does: the uncached labels
+    # frame would run flags, dedup and decision again
+    corrected = spark.read.schema(schema.LABELS_SCHEMA) \
+        .parquet(f"{args.output}/labels")
+    diff = reconcile.diff(corrected, spark.read.parquet(args.stream_labels))
     # diff volume scales with the cross-batch dup rate (at 10^12 clips a
     # few-% rate is 10^10 rows), so no coalesce(1) here: keep the upstream
     # (AQE-sized) partitioning — unlike the O(n_parts)-bounded lineage/

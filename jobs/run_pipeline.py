@@ -4,7 +4,7 @@ Ship (north_rule):
     cd <repo> && zip -qr /tmp/engine.zip engine
     spark-submit --master 'local[32]' --py-files /tmp/engine.zip \
         jobs/run_pipeline.py --input /path/clips --output /path/out \
-        [--wave-size 16] [--no-resume] [--no-checkpoint]
+        [--wave-size 16] [--no-resume]
 
 Output layout:
     out/scored/part_id=*/    per-partition checkpoint of the heavy stage
@@ -34,37 +34,21 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--wave-size", type=int, default=16)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-checkpoint", action="store_true",
-                    help="single fused in-memory pass, labels only")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
     # importing engine pins the BLAS/OpenMP pools (engine/__init__.py)
     # before the JVM starts, so forked Python workers inherit the pin
-    from engine import config, lineage, schema, session, sources
-    from engine.operators import decision, pipeline
+    from engine import config, lineage, session, sources
 
     spark = session.get_or_create("clip-quality-pipeline")
 
     t0 = time.time()
     clips = sources.read_clips_table(spark, args.input)
-    if args.no_checkpoint:
-        with pipeline.labeled(clips) as labels:
-            (labels.repartition("part_id").write.mode("overwrite")
-             .partitionBy("part_id").parquet(f"{args.output}/labels"))
-        # metrics over the labels just written, as Stage B does: the
-        # uncached labels frame would run flags, dedup and decision again
-        labels = spark.read.schema(schema.LABELS_SCHEMA) \
-            .parquet(f"{args.output}/labels")
-        decision.lineage_metrics(labels).coalesce(1).write.mode("overwrite") \
-            .parquet(f"{args.output}/lineage")
-        metrics = spark.read.schema(schema.LINEAGE_SCHEMA) \
-            .parquet(f"{args.output}/lineage")
-    else:
-        _, metrics = lineage.run_checkpointed(
-            spark, clips, args.output,
-            wave_size=args.wave_size, resume=not args.no_resume)
+    _, metrics = lineage.run_checkpointed(
+        spark, clips, args.output,
+        wave_size=args.wave_size, resume=not args.no_resume)
 
     # one aggregate over the small lineage table: no summary-only pass
     # over labels/

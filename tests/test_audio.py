@@ -29,7 +29,9 @@ def test_features_values():
     sr = 8000
     ref = _tone(sr, 2.0, 200.0, 0.25)
     payload = (ref * 32767.0).astype("<i2").tobytes()
-    dur, n, rms, clip_ratio, checksum = audio_core.features(payload, sr)
+    undecodable, (dur, n, rms, clip_ratio, checksum), _ = \
+        audio_core.analyze(payload, sr)
+    assert not undecodable
     assert dur == 2000 and n == sr * 2
     assert abs(rms - 0.25 / np.sqrt(2)) < 1e-3
     assert clip_ratio == 0.0
@@ -40,7 +42,7 @@ def test_features_clipping_detected():
     sr = 8000
     ref = np.ones(sr) * 0.9999
     payload = (ref * 32767.0).astype("<i2").tobytes()
-    _, _, _, clip_ratio, _ = audio_core.features(payload, sr)
+    _, (_, _, _, clip_ratio, _), _ = audio_core.analyze(payload, sr)
     assert clip_ratio > 0.99
 
 
@@ -48,12 +50,17 @@ def test_features_clipping_detected():
     (None, 16000), (b"", 16000), (b"\x01", 16000),
 ])
 def test_features_degenerate_payload(payload, sr):
-    assert audio_core.features(payload, sr) == (None, None, None, None, None)
+    undecodable, feats, frames = audio_core.analyze(payload, sr)
+    assert feats == (None, None, None, None, None)
+    assert frames == (None, None, None)
+    # a present payload that decodes to no samples is UNDECODABLE; a
+    # missing one is not (DUR_MISMATCH's concern instead)
+    assert undecodable == (payload is not None)
 
 
 def test_features_bad_sr():
     payload = (np.zeros(100)).astype("<i2").tobytes()
-    dur, n, rms, cr, ck = audio_core.features(payload, 0)
+    _, (dur, n, rms, cr, ck), _ = audio_core.analyze(payload, 0)
     assert dur is None and n == 100 and ck is not None
 
 
@@ -217,13 +224,13 @@ def test_frame_features_tone_vs_silence():
     sr = 16000
     ref = _tone(sr, 1.0, 440.0, 0.3)
     payload = (ref * 32767.0).astype("<i2").tobytes()
-    sil, flat, mel = audio_core.frame_features(payload, sr)
+    _, _, (sil, flat, mel) = audio_core.analyze(payload, sr)
     assert sil == 0.0                      # a 0.3-amplitude tone is never silent
     assert flat is not None and flat < 0.5  # tonal -> low flatness
     assert isinstance(mel, list) and len(mel) == audio_core.N_MELS
 
     quiet = np.zeros(sr, dtype="<i2").tobytes()
-    sil2, flat2, mel2 = audio_core.frame_features(quiet, sr)
+    _, _, (sil2, flat2, mel2) = audio_core.analyze(quiet, sr)
     assert sil2 == 1.0
     assert len(mel2) == audio_core.N_MELS
 
@@ -233,16 +240,18 @@ def test_frame_features_partial_silence():
     sig = np.zeros(sr, dtype=np.float32)
     sig[: sr // 10] = _tone(sr, 0.1, 300.0, 0.5)  # first 10% loud
     payload = (sig * 32767.0).astype("<i2").tobytes()
-    sil, _, _ = audio_core.frame_features(payload, sr)
+    _, _, (sil, _, _) = audio_core.analyze(payload, sr)
     assert 0.7 < sil < 0.95
 
 
 def test_frame_features_degenerate():
-    assert audio_core.frame_features(None, 16000) == (None, None, None)
-    assert audio_core.frame_features(b"\x00\x01", 16000) == (None, None, None)
+    assert audio_core.analyze(None, 16000)[2] == (None, None, None)
+    # one sample decodes but is shorter than a frame
+    undecodable, _, frames = audio_core.analyze(b"\x00\x01", 16000)
+    assert not undecodable and frames == (None, None, None)
     # invalid sr falls back to FALLBACK_SR geometry, still defined
     payload = np.zeros(16000, dtype="<i2").tobytes()
-    sil, flat, mel = audio_core.frame_features(payload, -1)
+    _, _, (sil, flat, mel) = audio_core.analyze(payload, -1)
     assert sil == 1.0 and len(mel) == audio_core.N_MELS
 
 

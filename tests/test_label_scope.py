@@ -105,18 +105,25 @@ def _py_sources(root: str):
 
 
 def test_one_session_builder_and_one_label_composition():
-    """Guard: sessions are built only by engine/session.py, and inside
-    engine/ only pipeline.py composes flags and decision (tests of single
-    operators may call them directly)."""
+    """Guard: sessions are built only by engine/session.py; inside engine/
+    only pipeline.py composes flags and decision (tests of single operators
+    may call them directly); and outside pipeline.py nothing in engine/ or
+    jobs/ calls `run_pipeline`, which leaves its cache to the caller."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = re.compile(r"SparkSession\s*\.\s*" + "builder")
     composition = re.compile(
         r"^(?!\s*def ).*\b(with_heuristic_flags|with_decision)\(", re.M)
-    builders, composers = [], []
+    unscoped = re.compile(r"^(?!\s*def ).*\brun_pipeline\(", re.M)
+    pipeline_py = os.path.join("engine", "operators", "pipeline.py")
+    builders, composers, unscoped_callers = [], [], []
     for rel, text in _py_sources(root):
         if builder.search(text):
             builders.append(rel)
         if rel.startswith("engine" + os.sep) and composition.search(text):
             composers.append(rel)
+        if (rel.startswith(("engine" + os.sep, "jobs" + os.sep))
+                and rel != pipeline_py and unscoped.search(text)):
+            unscoped_callers.append(rel)
     assert builders == [os.path.join("engine", "session.py")]
-    assert composers == [os.path.join("engine", "operators", "pipeline.py")]
+    assert composers == [pipeline_py]
+    assert unscoped_callers == []

@@ -206,9 +206,14 @@ def test_reconcile_corrects_cross_batch_dups_only(spark, clips_t1, tmp_path):
     """Lambda-split closure: stream ingest (within-batch dedup only) then
     batch reconcile -> corrected labels equal the pure-batch answer, and
     every flip is duplicate-rule related (cross-batch dup pairs the stream
-    could not see)."""
+    could not see).  Reconcile as jobs/reconcile_dups.py composes it:
+    write the batch labels inside `pipeline.labeled`, diff what was
+    written; no cache outlives it."""
+    from engine import schema
     from engine.streaming import reconcile, stream_pipeline
 
+    # earlier tests' run_pipeline calls leave their caches to the caller
+    spark.catalog.clearCache()
     path, _, _ = clips_t1
     out = str(tmp_path / "stream_out")
     q = stream_pipeline.start_stream(
@@ -216,18 +221,21 @@ def test_reconcile_corrects_cross_batch_dups_only(spark, clips_t1, tmp_path):
     q.awaitTermination(300)
     stream_labels = spark.read.parquet(f"{out}/labels")
 
-    batch, diff = reconcile.reconcile(spark, path, stream_labels)
-    d = diff.toPandas()
+    corrected = str(tmp_path / "corrected")
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        labels.write.partitionBy("part_id").parquet(corrected)
+    batch = spark.read.schema(schema.LABELS_SCHEMA).parquet(corrected)
+    d = reconcile.diff(batch, stream_labels).toPandas()
     assert d["dup_related"].all(), d[~d["dup_related"]].head()
 
     # corrected == pure batch answer on keep/drop for every clip
     b = batch.select("clip_id", "keep", "drop_reason").toPandas() \
         .sort_values("clip_id").reset_index(drop=True)
-    from engine.operators import pipeline as pl
-    b2 = pl.run_pipeline(pl.read_clips(spark, path)) \
-        .select("clip_id", "keep", "drop_reason").toPandas() \
-        .sort_values("clip_id").reset_index(drop=True)
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        b2 = labels.select("clip_id", "keep", "drop_reason").toPandas() \
+            .sort_values("clip_id").reset_index(drop=True)
     assert b.equals(b2)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
 def test_stream_dup_flags_cross_batch(spark, tmp_path):
