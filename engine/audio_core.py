@@ -37,7 +37,8 @@ CLIP_THRESHOLD = 32760  # |sample| >= this counts as clipped
 
 
 def decode_pcm_s16le(payload: bytes | None) -> np.ndarray | None:
-    """bytes -> int16 sample array; None/odd-length -> None (undecodable)."""
+    """bytes -> int16 sample array; None or a 0-/1-byte payload -> None
+    (undecodable).  A longer odd-length payload is cut to its even prefix."""
     if payload is None or len(payload) < 2:
         return None
     n = len(payload) - (len(payload) % 2)

@@ -124,7 +124,6 @@ PPL_MAX = 90.0
 # Near-duplicate detection (graft of Step5 run-merge + Step4 small-gap snap)
 # ---------------------------------------------------------------------------
 
-SIMHASH_BITS = 64
 SIMHASH_BANDS = 4              # 4 bands x 16 bits: exact recall for d<=3
 SIMHASH_BAND_BITS = 16
 SIMHASH_HAMMING_MAX = 3

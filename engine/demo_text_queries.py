@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .demo_queries import _t
+from .operators import repair
 
 _STOPWORDS = ("the", "a", "of")
 JACCARD_BUCKET_CAP = 64  # skip boilerplate mega-buckets in the pair join
@@ -490,13 +491,11 @@ def q_repair_rescore(spark, sf_dir):
     rule (short text / low alpha ratio) get the engine's normalization
     repair (control chars -> space, ASCII-whitespace-run collapse, trim)
     and are re-evaluated; status = KEPT (never failed) / REPAIRED (passes
-    after normalization) / DROPPED (repair can't save it).  Same
-    normalization expression as engine/operators/repair.py."""
+    after normalization) / DROPPED (repair can't save it).  The
+    normalization is the engine's own (repair.normalize_col)."""
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
-    norm = F.trim(F.regexp_replace(
-        F.regexp_replace(t, "[\\x00-\\x1F\\x7F]", " "),
-        "[ \\t\\n\\x0B\\f\\r]+", " "))
+    norm = repair.normalize_col(t)
 
     def _fails(c):
         n_alpha = F.length(F.regexp_replace(c, "[^a-zA-Z]", ""))

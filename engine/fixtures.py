@@ -2,7 +2,7 @@
 
 Seeded (default 42), no wall-clock, no external data.  Produces a pandas
 frame in the exact `input_hint` shape (minus part_id, which is stamped by
-Spark as pmod(xxhash64(clip_id), N_PARTS) at write time so it matches the
+Spark with schema.part_id_col at write time so it matches the
 engine's partitioning bit-for-bit) plus a parallel `planted` frame tagging
 each row's defect class for per-rule coverage tests.
 
@@ -380,16 +380,13 @@ def generate_speakers(n_speakers: int = 50, seed: int = 42) -> pd.DataFrame:
 
 def write_clips_parquet(spark, clips_pd: pd.DataFrame, path: str,
                         mode: str = "overwrite") -> None:
-    """Stamp part_id = pmod(xxhash64(clip_id), N_PARTS) with Spark (so it is
-    bit-identical to the engine's partitioner) and write partitioned parquet
-    (the Iceberg-layout fallback, SURVEY.md §7.0)."""
-    from pyspark.sql import functions as F
+    """Stamp part_id with the engine's partitioner (schema.part_id_col) and
+    write partitioned parquet (the Iceberg-layout fallback, SURVEY.md §7.0)."""
     from pyspark.sql import types as T
 
-    from . import config, schema
+    from . import schema
 
     input_schema = T.StructType(schema.CLIPS_SCHEMA.fields[:-1])
-    base = spark.createDataFrame(clips_pd, schema=input_schema)
-    df = base.withColumn(
-        "part_id", F.pmod(F.xxhash64("clip_id"), F.lit(config.N_PARTS)).cast("int"))
+    df = (spark.createDataFrame(clips_pd, schema=input_schema)
+          .withColumn("part_id", schema.part_id_col()))
     df.repartition("part_id").write.mode(mode).partitionBy("part_id").parquet(path)

@@ -19,8 +19,8 @@ from .. import config
 
 def alpha_ratio_col(t: Column) -> Column:
     """Unicode-letter fraction of the transcript (null when unevaluable).
-    Shared by the heuristic pass and the repair merge-back so repaired rows
-    never carry stats computed from the pre-repair text."""
+    repair._fails_text_rules computes the same ratio in Python
+    (`str.isalpha`, the same Unicode letter categories as `\\p{L}`)."""
     n_chars = F.length(t)
     n_alpha = F.length(F.regexp_replace(t, r"[^\p{L}]", ""))
     return F.when(t.isNotNull() & (n_chars > 0),

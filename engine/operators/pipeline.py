@@ -10,9 +10,9 @@ with CSV materialization between them (PostProcessing-Pipeline.R:20-44);
 Catalyst fuses our scan + UDF + flag projection into a single stage.
 
 `label` is that fixed composition after scoring.  Every path goes through
-it: the in-memory pass (`labeled`, `run_pipeline`), Stage B of the
-checkpointed job (lineage.run_checkpointed) and the per-clip stream
-(streaming.stateful.labeled_clip_stream, `dups=False`).
+it: the in-memory pass (`labeled`, `run_pipeline`), each micro-batch of
+the stream (streaming.stream_pipeline.start_stream, through `labeled`) and
+Stage B of the checkpointed job (lineage.run_checkpointed).
 
 The scored table is pinned before dedup: dedup references it from three
 plan branches (main + both sides of the band self-join), and without a
@@ -28,42 +28,25 @@ from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .. import config, schema
+from .. import schema
 from . import decision, dedup, heuristics, scoring
 
 
 def read_clips(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    # partition-directory reads give part_id back as int32 or int64
-    # depending on writer; normalize (when present) then verify
-    dtypes = dict(df.dtypes)
-    if "part_id" in dtypes and dtypes["part_id"] != "int":
-        df = df.withColumn("part_id", df["part_id"].cast("int"))
-    schema.assert_clips_schema(df)
-    return df
+    return schema.clips_frame(spark.read.parquet(path))
 
 
-def label(scored: DataFrame, dups: bool = True) -> DataFrame:
-    """scored (scoring.SCORED_SCHEMA) -> labels (decision.LABEL_COLUMNS).
-
-    `dups=False` pins both dup flags to False instead of running dedup:
-    the stream's per-clip feed, whose dup verdicts belong to the batch
-    reconciliation (stream_pipeline docstring)."""
+def label(scored: DataFrame) -> DataFrame:
+    """scored (scoring.SCORED_SCHEMA) -> labels (decision.LABEL_COLUMNS)."""
     # repair-then-rescore already happened INSIDE the scoring UDF
     # (repair.repair_batch, fused into scoring._score_batch): `transcript`
     # is the final (possibly normalized) text and `repaired` its lineage,
     # so heuristic flags, model flags, and dup grouping all see the
     # repaired values with no extra stage
-    flagged = heuristics.with_model_flags(heuristics.with_heuristic_flags(scored))
-    if dups:
-        flagged = dedup.with_dup_flags(flagged)
-    else:
-        flagged = flagged.withColumns(
-            {f"f_{rule}": F.lit(False)
-             for rule in (config.RULE_EXACT_DUP, config.RULE_NEAR_DUP)})
+    flagged = dedup.with_dup_flags(
+        heuristics.with_model_flags(heuristics.with_heuristic_flags(scored)))
     return decision.to_labels(decision.with_decision(flagged))
 
 
@@ -91,6 +74,6 @@ def labeled(clips: DataFrame) -> Iterator[DataFrame]:
 
 def run_pipeline(clips: DataFrame) -> DataFrame:
     """clips (schema.CLIPS_SCHEMA) -> labels, scored table left cached.
-    The caller owns that cache (`spark.catalog.clearCache()`); prefer
-    `labeled`, which releases it."""
+    The caller owns that cache (`scoring.score_clips(clips).unpersist()`
+    releases it); prefer `labeled`, which releases it itself."""
     return label(_pin(scoring.score_clips(clips)))

@@ -56,8 +56,9 @@ _WS_RE = re.compile("[ \t\n\x0b\f\r]+")
 
 def normalize_col(t: Column) -> Column:
     """control chars -> space, collapse ASCII whitespace runs, trim.
-    (Column form, used by the demo/oracle queries; semantics identical to
-    `normalize_text` below.)"""
+    (Column form, used by demo_text_queries.q_repair_rescore, whose DuckDB
+    twin spells the same regexes; semantics identical to `normalize_text`
+    below, which the scoring UDF runs.)"""
     return F.trim(F.regexp_replace(
         F.regexp_replace(t, CTRL_CLASS, " "), WS_RUN, " "))
 

@@ -7,7 +7,11 @@ and reject drift at read time.  Shape per BASELINE.json `input_hint`.
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import config
 
 CLIPS_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType(), nullable=False),
@@ -16,7 +20,7 @@ CLIPS_SCHEMA = T.StructType([
     T.StructField("dur_ms", T.IntegerType(), nullable=True),
     T.StructField("codec", T.StringType(), nullable=True),
     T.StructField("transcript", T.StringType(), nullable=True),
-    # physical partition column: part_id = pmod(xxhash64(clip_id), N_PARTS)
+    # physical partition column: part_id_col()
     T.StructField("part_id", T.IntegerType(), nullable=False),
 ])
 
@@ -50,6 +54,22 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("n_repaired", T.LongType(), nullable=False),
     T.StructField("rule_version", T.StringType(), nullable=False),
 ])
+
+
+def part_id_col() -> Column:
+    """The engine's partitioner: part_id = pmod(xxhash64(clip_id), N_PARTS)."""
+    return F.pmod(F.xxhash64("clip_id"), F.lit(config.N_PARTS)).cast("int")
+
+
+def clips_frame(df: DataFrame) -> DataFrame:
+    """A read clips table -> schema-asserted clips frame.  Partition-
+    directory reads give part_id back as int32 or int64 depending on the
+    writer; normalize it (when present), then verify."""
+    dtypes = dict(df.dtypes)
+    if "part_id" in dtypes and dtypes["part_id"] != "int":
+        df = df.withColumn("part_id", df["part_id"].cast("int"))
+    assert_clips_schema(df)
+    return df
 
 
 def assert_clips_schema(df) -> None:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import config, schema
+from . import schema
 
 ICEBERG_PREFIX = "iceberg:"
 
@@ -65,9 +65,7 @@ def ingest_manifest(spark: SparkSession, manifest_csv: str,
                 .select(F.element_at(F.split("path", "/"), -1).alias("payload_file"),
                         F.col("content").alias("bytes")))
     df = (m.join(payloads, "payload_file", "left")
-          .withColumn("part_id",
-                      F.pmod(F.xxhash64("clip_id"),
-                             F.lit(config.N_PARTS)).cast("int"))
+          .withColumn("part_id", schema.part_id_col())
           .select("clip_id", "bytes", "sr_hz", "dur_ms", "codec",
                   "transcript", "part_id"))
     schema.assert_clips_schema(df)
@@ -88,11 +86,6 @@ def read_clips_table(spark: SparkSession, ref: str) -> DataFrame:
                 "and spark.sql.catalog.* settings), or pass a partitioned-"
                 f"parquet path instead ({e.__class__.__name__}: {e})"
             ) from e
-        dtypes = dict(df.dtypes)
-        if "part_id" in dtypes and dtypes["part_id"] != "int":
-            df = df.withColumn("part_id", df["part_id"].cast("int"))
-        schema.assert_clips_schema(df)
-        return df
-    from .operators import pipeline
-
-    return pipeline.read_clips(spark, ref)
+    else:
+        df = spark.read.parquet(ref)
+    return schema.clips_frame(df)

@@ -1,23 +1,12 @@
-"""Custom stateful streaming operator: running per-language corpus stats.
+"""Custom stateful streaming operators: TTL-bounded dup state.
 
 `stream_pipeline` handles ingest (foreachBatch, full fused pipeline per
-micro-batch).  This module adds the *custom stateful operator* surface:
-`applyInPandasWithState` maintaining per-language running totals across
-micro-batches — the streaming analog of evaluation.corpus_report, emitting
-an updated row per language per batch (a live quality dashboard feed).
+micro-batch, dups flagged within the batch only).  This module adds the
+*custom stateful operator* surface (`applyInPandasWithState`) that
+jobs/stream_dup_monitor.py ships.
 
-Scope matches the documented lambda split (stream_pipeline docstring):
-per-clip rules only — duplicate rules need global state that never expires
-and belong to the periodic batch reconciliation, so the streaming labels
-come from the shared composition with dup flags pinned False
-(`pipeline.label(scored, dups=False)`).  State per group is O(1) (a few
-counters), so state-store size is bounded by the language-key
-cardinality, not rows.
-Repair is part of this feed too: it runs inside scoring.score_clips (the
-fused UDF), so the labels here see the repaired transcript, like the batch
-and ingest paths.
-
-`stream_dup_flags` and `stream_neardup_flags` narrow the lambda split:
+`stream_dup_flags` and `stream_neardup_flags` narrow that lambda split
+(stream_pipeline docstring):
 an exact-audio-dup flag (checksum state) and a textual near-dup flag
 (simhash band-bucket state) against ALL clips seen within a state TTL,
 not just the current micro-batch.  State is one marker per distinct
@@ -39,48 +28,6 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import config, simhash_core
-from ..operators import pipeline, scoring
-
-STATS_SCHEMA = T.StructType([
-    T.StructField("lang", T.StringType(), False),
-    T.StructField("n_total", T.LongType(), False),
-    T.StructField("n_kept", T.LongType(), False),
-    T.StructField("n_scrubbed", T.LongType(), False),
-])
-_STATE_SCHEMA = T.StructType([
-    T.StructField("n_total", T.LongType(), False),
-    T.StructField("n_kept", T.LongType(), False),
-    T.StructField("n_scrubbed", T.LongType(), False),
-])
-
-
-def _update(key, pdfs, state: GroupState):
-    n_total, n_kept, n_scrubbed = state.get if state.exists else (0, 0, 0)
-    for pdf in pdfs:
-        n_total += len(pdf)
-        n_kept += int(pdf["keep"].sum())
-        n_scrubbed += int((pdf["n_scrub_hits"] > 0).sum())
-    state.update((n_total, n_kept, n_scrubbed))
-    yield pd.DataFrame({"lang": [key[0]], "n_total": [n_total],
-                        "n_kept": [n_kept], "n_scrubbed": [n_scrubbed]})
-
-
-def labeled_clip_stream(stream_clips: DataFrame) -> DataFrame:
-    """streaming clips -> streaming per-clip labels (per-clip rules only;
-    dup flags pinned False per the lambda split)."""
-    return pipeline.label(scoring.score_clips(stream_clips), dups=False)
-
-
-def running_lang_stats(labeled_stream: DataFrame) -> DataFrame:
-    """streaming labels -> streaming running (lang, n_total, n_kept,
-    n_scrubbed), state updated per micro-batch."""
-    return (labeled_stream
-            .select("lang", "keep", "n_scrub_hits")
-            .groupBy("lang")
-            .applyInPandasWithState(
-                _update, STATS_SCHEMA, _STATE_SCHEMA,
-                "update", GroupStateTimeout.NoTimeout))
-
 
 # ---------------------------------------------------------------------------
 # cross-batch exact-dup flag with TTL-bounded state

@@ -70,8 +70,8 @@ def test_adversarial_rows_engine_matches_oracle(spark, tmp_path):
     path = str(tmp_path / "adv_clips")
     fixtures.write_clips_parquet(spark, clips_pd, path)
 
-    eng = (pipeline.run_pipeline(pipeline.read_clips(spark, path))
-           .toPandas().sort_values("clip_id").reset_index(drop=True))
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        eng = labels.toPandas().sort_values("clip_id").reset_index(drop=True)
     ora = oracle.label_clips(clips_pd)
 
     assert eng["clip_id"].tolist() == ora["clip_id"].tolist()

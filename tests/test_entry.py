@@ -179,8 +179,9 @@ def test_ingest_manifest_matches_direct_table(spark, tmp_path):
             assert r.bytes is None
 
     # end-to-end: pipeline over the ingested frame runs and labels every row
-    labels = pipeline.run_pipeline(ingested).toPandas()
-    assert len(labels) == 60 and labels["clip_id"].is_unique
+    with pipeline.labeled(ingested) as labels:
+        ids = labels.toPandas()["clip_id"]
+    assert len(ids) == 60 and ids.is_unique
 
 
 def test_iceberg_migration_layout_contract(spark, clips_t1):

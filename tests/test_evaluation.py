@@ -8,10 +8,10 @@ from engine.operators import evaluation, pipeline
 
 def test_salted_report_matches_unsalted_and_pandas(spark, clips_t1):
     path, _, _ = clips_t1
-    labels = pipeline.run_pipeline(pipeline.read_clips(spark, path))
-
-    salted = evaluation.corpus_report(labels, salted=True).toPandas()
-    plain = evaluation.corpus_report(labels, salted=False).toPandas()
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        salted = evaluation.corpus_report(labels, salted=True).toPandas()
+        plain = evaluation.corpus_report(labels, salted=False).toPandas()
+        lp = labels.toPandas()
 
     assert list(salted.columns) == list(plain.columns)
     s = salted.drop(columns=["drop_reason_counts"]).reset_index(drop=True)
@@ -21,7 +21,6 @@ def test_salted_report_matches_unsalted_and_pandas(spark, clips_t1):
         assert dict(a) == dict(b)
 
     # independent pandas cross-check of the headline numbers
-    lp = labels.toPandas()
     for row in salted.itertuples(index=False):
         grp = lp[lp["lang"] == row.lang]
         assert row.n_total == len(grp)
@@ -44,29 +43,29 @@ def test_report_by_dim_matches_pandas_and_broadcasts(spark, clips_t1):
     from engine import fixtures
     from engine.operators import evaluation, pipeline
 
-    path, _, _ = clips_t1
-    labels = pipeline.run_pipeline(pipeline.read_clips(spark, path))
-    dim = spark.createDataFrame(fixtures.generate_speakers(50, seed=42))
-    rep = evaluation.corpus_report_by_dim(labels, dim, 50)
-
-    # the DIM join must broadcast (upstream label lineage may contain other
-    # joins, e.g. the repair merge-back — assert on the speaker_id join)
     import re
 
-    plan = rep._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"BroadcastHashJoin \[speaker_id", plan), plan[:3000]
-    assert not re.search(r"SortMergeJoin \[speaker_id", plan)
-
-    got = rep.toPandas().set_index(["region", "device"]).sort_index()
-
-    # independent pandas recomputation from the enriched row-level frame
-    enriched = (labels
+    path, _, _ = clips_t1
+    dim = spark.createDataFrame(fixtures.generate_speakers(50, seed=42))
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        rep = evaluation.corpus_report_by_dim(labels, dim, 50)
+        plan = rep._jdf.queryExecution().executedPlan().toString()
+        got = rep.toPandas().set_index(["region", "device"]).sort_index()
+        rows = (labels
                 .withColumn("speaker_id",
                             F.pmod(F.xxhash64("clip_id"), F.lit(50)).cast("int"))
                 .select("clip_id", "speaker_id", "keep", "n_scrub_hits",
                         "repaired")
-                .toPandas()
-                .merge(fixtures.generate_speakers(50, seed=42), on="speaker_id"))
+                .toPandas())
+
+    # the DIM join must broadcast (upstream label lineage contains other
+    # joins, e.g. dedup's band self-join — assert on the speaker_id join)
+    assert re.search(r"BroadcastHashJoin \[speaker_id", plan), plan[:3000]
+    assert not re.search(r"SortMergeJoin \[speaker_id", plan)
+
+    # independent pandas recomputation from the enriched row-level frame
+    enriched = rows.merge(fixtures.generate_speakers(50, seed=42),
+                          on="speaker_id")
     exp = enriched.groupby(["region", "device"]).agg(
         n_total=("clip_id", "size"), n_kept=("keep", "sum"),
         n_scrubbed=("n_scrub_hits", lambda s: int((s > 0).sum())),
@@ -87,12 +86,12 @@ def test_by_dim_partial_dim_surfaces_unknown(spark, clips_t1):
     from engine.operators import evaluation, pipeline
 
     path, _, _ = clips_t1
-    labels = pipeline.run_pipeline(pipeline.read_clips(spark, path))
-    n_labels = labels.count()
     # drop half the speakers from the dim
     speakers = fixtures.generate_speakers(50, seed=42)
     dim = spark.createDataFrame(speakers[speakers["speaker_id"] < 25])
-    rep = evaluation.corpus_report_by_dim(labels, dim, 50).toPandas()
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        n_labels = labels.count()
+        rep = evaluation.corpus_report_by_dim(labels, dim, 50).toPandas()
     assert int(rep["n_total"].sum()) == n_labels
     unk = rep[(rep["region"] == "<unknown>") & (rep["device"] == "<unknown>")]
     assert len(unk) == 1 and int(unk["n_total"].iloc[0]) > 0

@@ -10,12 +10,12 @@ from __future__ import annotations
 import os
 import re
 
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from engine import config, fixtures, lineage
-from engine.operators import pipeline
-from engine.streaming import stateful, stream_pipeline
+from engine import fixtures, lineage
+from engine.operators import pipeline, scoring
+from engine.streaming import stream_pipeline
 
 
 def _n_persisted(spark) -> int:
@@ -65,30 +65,50 @@ def test_labeled_releases_cache_when_body_raises(spark, small_clips):
 def test_batch_job_and_stream_share_label(spark, small_clips, tmp_path,
                                           monkeypatch):
     """Every scored->labels path goes through pipeline.label: the batch
-    pass and Stage B with dup flags, the per-clip stream without."""
-    calls: list[bool] = []  # the `dups` of each call
+    pass, Stage B of the checkpointed job and each stream micro-batch."""
+    calls: list[int] = []
     real = pipeline.label
 
-    def counting(scored, dups=True):
-        calls.append(dups)
-        return real(scored, dups=dups)
+    def counting(scored):
+        calls.append(1)
+        return real(scored)
 
     monkeypatch.setattr(pipeline, "label", counting)
     clips = pipeline.read_clips(spark, small_clips)
 
     with pipeline.labeled(clips) as labels:
         labels.write.parquet(str(tmp_path / "batch"))
-    assert calls == [True]
+    assert len(calls) == 1
 
     lineage.run_checkpointed(spark, clips, str(tmp_path / "job"),
                              wave_size=64, log=lambda msg: None)
-    assert calls == [True, True]
+    assert len(calls) == 2
 
-    per_clip = stateful.labeled_clip_stream(clips)
-    assert calls == [True, True, False]
-    dup_drops = F.col("drop_reason").isin(config.RULE_EXACT_DUP,
-                                          config.RULE_NEAR_DUP)
-    assert per_clip.where(dup_drops).count() == 0
+    out = str(tmp_path / "stream")
+    q = stream_pipeline.start_stream(spark, small_clips, out,
+                                     str(tmp_path / "ckpt"),
+                                     available_now=True,
+                                     max_files_per_trigger=1000)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    n_batches = len(os.listdir(f"{out}/labels"))  # batch_id=* dirs
+    assert n_batches >= 1 and len(calls) == 2 + n_batches
+
+
+def test_run_pipeline_pins_scored_for_the_caller(spark, small_clips):
+    """run_pipeline gives the labels `labeled` gives and leaves exactly the
+    scored table persisted; unpersisting the same scored plan releases it."""
+    clips = pipeline.read_clips(spark, small_clips)
+    before = _n_persisted(spark)
+    got = pipeline.run_pipeline(clips).toPandas()
+    assert _n_persisted(spark) == before + 1
+    scoring.score_clips(clips).unpersist()
+    assert _n_persisted(spark) == before
+    with pipeline.labeled(clips) as labels:
+        exp = labels.toPandas()
+    pd.testing.assert_frame_equal(
+        got.sort_values("clip_id").reset_index(drop=True),
+        exp.sort_values("clip_id").reset_index(drop=True))
 
 
 def _py_sources(root: str):
@@ -107,23 +127,29 @@ def _py_sources(root: str):
 def test_one_session_builder_and_one_label_composition():
     """Guard: sessions are built only by engine/session.py; inside engine/
     only pipeline.py composes flags and decision (tests of single operators
-    may call them directly); and outside pipeline.py nothing in engine/ or
-    jobs/ calls `run_pipeline`, which leaves its cache to the caller."""
+    may call them directly); `label` takes no switch, so no call passes it
+    `dups=`; and outside pipeline.py `run_pipeline`, which leaves its cache
+    to the caller, is called once, by the test that releases that cache
+    (perfbench/, not scanned here, calls it too)."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = re.compile(r"SparkSession\s*\.\s*" + "builder")
     composition = re.compile(
         r"^(?!\s*def ).*\b(with_heuristic_flags|with_decision)\(", re.M)
+    # a `label(...)` call, one level of nested parentheses allowed
+    dups_switch = re.compile(r"\blabel\((?:[^()]|\([^()]*\))*?\bdups\s*=")
     unscoped = re.compile(r"^(?!\s*def ).*\brun_pipeline\(", re.M)
     pipeline_py = os.path.join("engine", "operators", "pipeline.py")
-    builders, composers, unscoped_callers = [], [], []
+    builders, composers, switched, unscoped_calls = [], [], [], []
     for rel, text in _py_sources(root):
         if builder.search(text):
             builders.append(rel)
         if rel.startswith("engine" + os.sep) and composition.search(text):
             composers.append(rel)
-        if (rel.startswith(("engine" + os.sep, "jobs" + os.sep))
-                and rel != pipeline_py and unscoped.search(text)):
-            unscoped_callers.append(rel)
+        if dups_switch.search(text):
+            switched.append(rel)
+        if rel != pipeline_py:
+            unscoped_calls += [rel] * len(unscoped.findall(text))
     assert builders == [os.path.join("engine", "session.py")]
     assert composers == [pipeline_py]
-    assert unscoped_callers == []
+    assert switched == []
+    assert unscoped_calls == [os.path.join("tests", "test_label_scope.py")]

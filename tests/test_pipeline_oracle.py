@@ -23,10 +23,8 @@ def _f1(y_true, y_pred) -> float:
 
 
 def _run_engine(spark, path: str) -> pd.DataFrame:
-    clips = pipeline.read_clips(spark, path)
-    labels = pipeline.run_pipeline(clips)
-    out = labels.toPandas().sort_values("clip_id").reset_index(drop=True)
-    return out
+    with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
+        return labels.toPandas().sort_values("clip_id").reset_index(drop=True)
 
 
 def test_engine_matches_oracle_t1(spark, clips_t1):
@@ -103,11 +101,13 @@ def test_determinism_across_partitionings(spark, clips_t1):
     (SURVEY §5.2-4; the reference is order-dependent, we must not be)."""
     path, _, _ = clips_t1
     clips = pipeline.read_clips(spark, path)
-    a = pipeline.run_pipeline(clips.repartition(2)) \
-        .toPandas().sort_values("clip_id").reset_index(drop=True)
-    b = pipeline.run_pipeline(clips.repartition(17)) \
-        .toPandas().sort_values("clip_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+
+    def labels_at(n_parts: int) -> pd.DataFrame:
+        with pipeline.labeled(clips.repartition(n_parts)) as labels:
+            return labels.toPandas().sort_values("clip_id") \
+                .reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(labels_at(2), labels_at(17))
 
 
 def test_engine_matches_oracle_telephony_g711(spark, tmp_path):
