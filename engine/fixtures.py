@@ -378,15 +378,40 @@ def generate_speakers(n_speakers: int = 50, seed: int = 42) -> pd.DataFrame:
     })
 
 
+_STAGE_ROW_GROUP_BYTES = 16 << 20
+
+
 def write_clips_parquet(spark, clips_pd: pd.DataFrame, path: str,
                         mode: str = "overwrite") -> None:
     """Stamp part_id with the engine's partitioner (schema.part_id_col) and
-    write partitioned parquet (the Iceberg-layout fallback, SURVEY.md §7.0)."""
+    write partitioned parquet (the Iceberg-layout fallback, SURVEY.md §7.0).
+
+    The frame is staged as one parquet file with pyarrow and read back by
+    Spark, so the payload reaches the executors through a file scan rather
+    than inside the tasks (createDataFrame from pandas ships the rows in
+    the task binaries: ~24 MB per task for a 12k-clip bench group).  The
+    stage is a local temp dir: fixture tables are written in local mode,
+    where the executors share the driver's filesystem."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from . import schema
 
     input_schema = T.StructType(schema.CLIPS_SCHEMA.fields[:-1])
-    df = (spark.createDataFrame(clips_pd, schema=input_schema)
-          .withColumn("part_id", schema.part_id_col()))
-    df.repartition("part_id").write.mode(mode).partitionBy("part_id").parquet(path)
+    table = pa.Table.from_pandas(clips_pd[input_schema.names],
+                                 to_arrow_schema(input_schema),
+                                 preserve_index=False)
+    # Spark's vectorized reader holds a whole row group's payloads in one
+    # batch (up to 4096 rows): bound the group in bytes, not rows
+    rows = max(1, _STAGE_ROW_GROUP_BYTES * table.num_rows
+               // max(1, table.nbytes))
+    with tempfile.TemporaryDirectory(prefix="clips-stage-") as stage:
+        pq.write_table(table, f"{stage}/clips.parquet", row_group_size=rows)
+        df = (spark.read.schema(input_schema).parquet(stage)
+              .withColumn("part_id", schema.part_id_col()))
+        df.repartition("part_id").write.mode(mode).partitionBy("part_id") \
+            .parquet(path)

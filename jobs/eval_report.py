@@ -2,7 +2,7 @@
 
 Ship (north_rule):
     cd <repo> && zip -qr /tmp/engine.zip engine
-    spark-submit --master 'local[32]' --py-files /tmp/engine.zip \
+    spark-submit --master 'local[*]' --py-files /tmp/engine.zip \
         jobs/eval_report.py --labels /path/out/labels [--out /path/report]
 
 Reads the labels written by jobs/run_pipeline.py, prints the per-language

@@ -2,7 +2,7 @@
 
 Ship (north_rule):
     cd <repo> && zip -qr /tmp/engine.zip engine
-    spark-submit --master 'local[32]' --py-files /tmp/engine.zip \
+    spark-submit --master 'local[*]' --py-files /tmp/engine.zip \
         jobs/reconcile_dups.py --clips /path/clips \
         --stream-labels /path/stream_out/labels --output /path/reconciled
 

@@ -2,9 +2,15 @@
 
 Ship (north_rule):
     cd <repo> && zip -qr /tmp/engine.zip engine
-    spark-submit --master 'local[32]' --py-files /tmp/engine.zip \
+    SPARK_SUBMIT_OPTS="-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000" \
+    spark-submit --master 'local[*]' --py-files /tmp/engine.zip \
         jobs/run_pipeline.py --input /path/clips --output /path/out \
         [--wave-size 16] [--no-resume]
+
+The SPARK_SUBMIT_OPTS prefix is the engine's JIT policy (engine.JIT_POLICY):
+spark-submit starts the driver JVM before Python imports engine, so the
+policy has to be on its command line.  The job warns when its JVM runs
+without it.
 
 Output layout:
     out/scored/part_id=*/    per-partition checkpoint of the heavy stage
@@ -40,9 +46,19 @@ def main() -> int:
 
     # importing engine pins the BLAS/OpenMP pools (engine/__init__.py)
     # before the JVM starts, so forked Python workers inherit the pin
+    import engine
     from engine import config, lineage, session, sources
 
     spark = session.get_or_create("clip-quality-pipeline")
+    # under spark-submit the JVM started before engine was imported, so
+    # the JIT policy reaches it only from the launch command line
+    jvm_args = spark.sparkContext._jvm.java.lang.management \
+        .ManagementFactory.getRuntimeMXBean().getInputArguments()
+    if not engine.sets_jit_tiers(" ".join(jvm_args)):
+        print("warning: the driver JVM runs without the engine's JIT policy "
+              "(C2 compiles lukewarm code on the cold pass); launch with "
+              f'SPARK_SUBMIT_OPTS="{engine.JIT_POLICY}" spark-submit ...',
+              file=sys.stderr)
 
     t0 = time.time()
     clips = sources.read_clips_table(spark, args.input)

@@ -212,3 +212,61 @@ def test_engine_import_pins_blas_pools():
          "print(os.environ['OMP_NUM_THREADS'])"],
         capture_output=True, text=True, check=True, cwd=repo)
     assert out2.stdout.strip() == "4"
+
+
+def test_engine_import_sets_jit_policy():
+    """`import engine` appends the JIT policy (engine.JIT_POLICY) to
+    SPARK_SUBMIT_OPTS, which pyspark's launcher puts on the command line of
+    the driver JVM it starts.  Whatever else the operator put there is
+    kept, and an operator's own tier flag wins: the policy is then not
+    appended.  Each case needs a fresh interpreter."""
+    import os
+    import subprocess
+    import sys
+
+    import engine
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def opts_after_import(operator_opts):
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_SUBMIT_OPTS"}
+        if operator_opts is not None:
+            env["SPARK_SUBMIT_OPTS"] = operator_opts
+        return subprocess.run(
+            [sys.executable, "-c",
+             "import os, engine; print(os.environ['SPARK_SUBMIT_OPTS'])"],
+            capture_output=True, text=True, check=True, cwd=repo,
+            env=env).stdout.strip()
+
+    flags = engine.JIT_POLICY.split()
+    assert len(flags) == 4
+    assert opts_after_import(None).split() == flags
+    kept = opts_after_import("-Dop.setting=1 -Xss4m")
+    assert kept.split() == ["-Dop.setting=1", "-Xss4m"] + flags
+    for own in ("-XX:TieredStopAtLevel=1", "-Xss4m -XX:Tier4CompileThreshold=1"):
+        assert opts_after_import(own) == own
+
+
+def test_spark_fixture_jvm_runs_jit_policy(spark):
+    """The shared session's driver JVM started after `import engine`, so
+    its input arguments carry every flag of the policy; the spark-submit
+    recipes in the docs carry the constant verbatim, so they cannot drift
+    from it."""
+    import os
+    import re
+
+    import engine
+
+    jvm_args = list(spark.sparkContext._jvm.java.lang.management
+                    .ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert set(engine.JIT_POLICY.split()) <= set(jvm_args)
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for doc in (".claude/skills/verify/SKILL.md", "CLAUDE.md",
+                "jobs/run_pipeline.py"):
+        text = open(os.path.join(repo, doc)).read().replace("\\\n", " ")
+        submits = [line for line in text.splitlines()
+                   if re.search(r"(spark-submit|\$SPARK_SUBMIT) --master", line)]
+        assert submits, doc
+        for line in submits:
+            assert f'SPARK_SUBMIT_OPTS="{engine.JIT_POLICY}"' in line, (doc, line)
