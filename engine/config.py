@@ -190,11 +190,6 @@ RULE_ORDER = (
 N_PARTS = 64                   # part_id = pmod(xxhash64(clip_id), N_PARTS)
 N_SALT = 16                    # salt buckets for skewed per-language aggs
 
-# Streaming dup-state TTL (ops knob, NOT part of rule_version: it bounds
-# the state store of the cross-batch dup operators, it does not change
-# any batch label).  State size ~= distinct-key arrival rate x this TTL.
-STREAM_DUP_TTL_MS = 60 * 60 * 1000
-
 # Arrow batch size for the fused UDF: payloads are ~100 KB+ of PCM per row,
 # so cap rows/batch to keep each Arrow batch ~64 MB.
 ARROW_MAX_RECORDS_PER_BATCH = 512

@@ -35,8 +35,11 @@ def diff(batch_labels: DataFrame, stream_labels: DataFrame) -> DataFrame:
     changed = (b.join(s, "clip_id")
                .where((F.col("keep") != F.col("keep_stream"))
                       | ~(F.col("drop_reason").eqNullSafe(F.col("reason_stream")))))
-    dup_related = (F.col("drop_reason").isin(*DUP_RULES)
-                   | F.col("reason_stream").isin(*DUP_RULES))
+    # a kept side's reason is null and `null IN (...)` is null, which
+    # would hide a keep vs non-dup-drop flip from both counts
+    dup_related = F.coalesce(F.col("drop_reason").isin(*DUP_RULES)
+                             | F.col("reason_stream").isin(*DUP_RULES),
+                             F.lit(False))
     return changed.select(
         "clip_id", "keep_stream", "reason_stream",
         F.col("keep").alias("keep_batch"),

@@ -19,6 +19,35 @@ import argparse
 import sys
 
 
+def reconcile(spark, clips_path: str, stream_labels_path: str,
+              output: str) -> tuple[int, int]:
+    """Write the global batch labels of `clips_path` to `<output>/labels`
+    and their diff against the streaming labels to `<output>/diff`;
+    returns (label flips, flips not explained by a dup rule)."""
+    from pyspark.sql import functions as F
+
+    from engine import schema
+    from engine.operators import pipeline
+    from engine.streaming import reconcile as rec
+
+    with pipeline.labeled(pipeline.read_clips(spark, clips_path)) as labels:
+        (labels.repartition("part_id").write.mode("overwrite")
+         .partitionBy("part_id").parquet(f"{output}/labels"))
+    # diff the labels just written, as Stage B does: the uncached labels
+    # frame would run flags, dedup and decision again
+    corrected = spark.read.schema(schema.LABELS_SCHEMA) \
+        .parquet(f"{output}/labels")
+    diff = rec.diff(corrected, spark.read.parquet(stream_labels_path))
+    # diff volume scales with the cross-batch dup rate (at 10^12 clips a
+    # few-% rate is 10^10 rows), so no coalesce(1) here: keep the upstream
+    # (AQE-sized) partitioning — unlike the O(n_parts)-bounded lineage/
+    # report writes, this table is corpus-sized in the worst case
+    diff.write.mode("overwrite").parquet(f"{output}/diff")
+
+    d = spark.read.parquet(f"{output}/diff")
+    return d.count(), d.where(~F.col("dup_related")).count()
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--clips", required=True)
@@ -26,31 +55,11 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from engine import schema, session
-    from engine.operators import pipeline
-    from engine.streaming import reconcile
+    from engine import session
 
     spark = session.get_or_create("clip-quality-reconcile")
-
-    with pipeline.labeled(pipeline.read_clips(spark, args.clips)) as labels:
-        (labels.repartition("part_id").write.mode("overwrite")
-         .partitionBy("part_id").parquet(f"{args.output}/labels"))
-    # diff the labels just written, as Stage B does: the uncached labels
-    # frame would run flags, dedup and decision again
-    corrected = spark.read.schema(schema.LABELS_SCHEMA) \
-        .parquet(f"{args.output}/labels")
-    diff = reconcile.diff(corrected, spark.read.parquet(args.stream_labels))
-    # diff volume scales with the cross-batch dup rate (at 10^12 clips a
-    # few-% rate is 10^10 rows), so no coalesce(1) here: keep the upstream
-    # (AQE-sized) partitioning — unlike the O(n_parts)-bounded lineage/
-    # report writes, this table is corpus-sized in the worst case
-    diff.write.mode("overwrite").parquet(f"{args.output}/diff")
-
-    d = spark.read.parquet(f"{args.output}/diff")
-    n_flips = d.count()
-    n_bad = d.where(~F.col("dup_related")).count()
+    n_flips, n_bad = reconcile(spark, args.clips, args.stream_labels,
+                               args.output)
     print(f"reconcile: {n_flips} label flips vs streaming "
           f"({n_flips - n_bad} dup-related, {n_bad} UNEXPLAINED)")
     spark.stop()

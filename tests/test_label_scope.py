@@ -130,7 +130,9 @@ def test_one_session_builder_and_one_label_composition():
     may call them directly); `label` takes no switch, so no call passes it
     `dups=`; and outside pipeline.py `run_pipeline`, which leaves its cache
     to the caller, is called once, by the test that releases that cache
-    (perfbench/, not scanned here, calls it too)."""
+    (perfbench/, not scanned here, calls it too).  One dedup answer: in
+    engine/ and jobs/ only pipeline.py calls `with_dup_flags`, and no
+    module keeps dup state in a stateful stream operator."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = re.compile(r"SparkSession\s*\.\s*" + "builder")
     composition = re.compile(
@@ -138,13 +140,21 @@ def test_one_session_builder_and_one_label_composition():
     # a `label(...)` call, one level of nested parentheses allowed
     dups_switch = re.compile(r"\blabel\((?:[^()]|\([^()]*\))*?\bdups\s*=")
     unscoped = re.compile(r"^(?!\s*def ).*\brun_pipeline\(", re.M)
+    dedup_call = re.compile(r"^(?!\s*def ).*\bwith_dup_flags\(", re.M)
+    stateful = re.compile(r"\bapplyInPandasWithState\b")
     pipeline_py = os.path.join("engine", "operators", "pipeline.py")
     builders, composers, switched, unscoped_calls = [], [], [], []
+    deduppers, state_users = [], []
     for rel, text in _py_sources(root):
         if builder.search(text):
             builders.append(rel)
         if rel.startswith("engine" + os.sep) and composition.search(text):
             composers.append(rel)
+        if rel.startswith(("engine" + os.sep, "jobs" + os.sep)):
+            if dedup_call.search(text):
+                deduppers.append(rel)
+            if stateful.search(text):
+                state_users.append(rel)
         if dups_switch.search(text):
             switched.append(rel)
         if rel != pipeline_py:
@@ -153,3 +163,5 @@ def test_one_session_builder_and_one_label_composition():
     assert composers == [pipeline_py]
     assert switched == []
     assert unscoped_calls == [os.path.join("tests", "test_label_scope.py")]
+    assert deduppers == [pipeline_py]
+    assert state_users == []
