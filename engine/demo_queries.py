@@ -733,7 +733,7 @@ def q_fuzzy_membership(spark, sf_dir):
     fuzzy c-means membership degrees (m=2) of every event value against
     fixed centers, as pure column expressions (engine/refit.py
     fuzzy_membership_cols).  Center FITTING is the driver-side refit job
-    (histogram + exact DP, refit.cluster_diagnostics); membership SCORING
+    (histogram + exact DP, refit.propose_strata); membership SCORING
     is a projection — the scale split that makes M5 viable at 10^12 rows.
     Rounded to 6 dp; denominator summed in center order in BOTH engines so
     float64 results are bit-identical."""

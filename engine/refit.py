@@ -156,12 +156,6 @@ def _kmeans_dp(centers: np.ndarray, counts: np.ndarray,
     return wss, back
 
 
-def optimal_1d_kmeans_wss(centers: np.ndarray, counts: np.ndarray,
-                          k: int) -> float:
-    """EXACT weighted k-means SSE at one k (see _kmeans_dp)."""
-    return _kmeans_dp(centers, counts, k)[0][k - 1]
-
-
 def _boundaries_from_back(centers: np.ndarray, counts: np.ndarray,
                           back: np.ndarray, k: int) -> list[float]:
     """Backtrack a k-segmentation from a DP `back` table built with
@@ -196,21 +190,6 @@ def _boundaries_from_back(centers: np.ndarray, counts: np.ndarray,
     return [float((means[i] + means[i + 1]) / 2.0) for i in range(len(means) - 1)]
 
 
-def kmeans_boundaries(centers: np.ndarray, counts: np.ndarray,
-                      k: int) -> list[float]:
-    """EXACT 1-D k-means segmentation -> k-1 boundary values (fewer when
-    fewer than k bins are occupied, see _boundaries_from_back), each the
-    midpoint of the means of two adjacent clusters (the same convention
-    kmeans2_boundary uses at k=2, INCLUDING its degenerate fallback).
-    Deterministic: ties in the DP argmin resolve to the leftmost split.
-    This is the multi-component analog of the reference's 5-7-component
-    strata derivation (mixture fit -> component boundaries,
-    Step3-Temporal-Inconsistency.R:150-355) with the seed-lottery mixture
-    fit replaced by a globally-optimal segmentation."""
-    _wss, back = _kmeans_dp(centers, counts, k)
-    return _boundaries_from_back(centers, counts, back, k)
-
-
 def _elbow_from_wss(wss: list[float]) -> int:
     """Curvature elbow over a WSS scan: argmax of the second difference
     of log(WSS+eps), defined at k = 2..len(wss)-1 (the discrete curvature
@@ -223,18 +202,6 @@ def _elbow_from_wss(wss: list[float]) -> int:
         curv = logw[:-2] - 2 * logw[1:-1] + logw[2:]
         return int(np.argmax(curv)) + 2
     return len(wss)
-
-
-def cluster_diagnostics(centers: np.ndarray, counts: np.ndarray,
-                        k_max: int = 6) -> dict:
-    """Cluster-count diagnostics — deterministic analog of the reference's
-    wss-scan + clusGap model selection (get_nbclust/clusGap,
-    Step2-Data-Incompleteness.R:223-224, Step3:377-379): exact WSS per k
-    from the DP above, elbow per _elbow_from_wss."""
-    wss = _kmeans_dp(centers, counts, k_max)[0]
-    return {"k": list(range(1, k_max + 1)),
-            "wss": [round(v, 6) for v in wss],
-            "elbow_k": _elbow_from_wss(wss)}
 
 
 def propose_strata(centers: np.ndarray, counts: np.ndarray,
@@ -253,7 +220,10 @@ def propose_strata(centers: np.ndarray, counts: np.ndarray,
     previously collapsed to a 2-band proposal).  The default k_max=8
     covers the reference's observed 5-7-component range with headroom.
     ONE DP pass serves both the diagnostics and the backtrack; the
-    diagnostics report k = 1..k_max, the shape cluster_diagnostics has."""
+    diagnostics report the exact WSS at k = 1..k_max and the elbow — the
+    deterministic analog of the reference's wss-scan + clusGap model
+    selection (get_nbclust/clusGap, Step2-Data-Incompleteness.R:223-224,
+    Step3:377-379).  Ties in the DP argmin resolve to the leftmost split."""
     wss, back = _kmeans_dp(centers, counts, k_max + 1)
     elbow_k = _elbow_from_wss(wss)
     diag = {"k": list(range(1, k_max + 1)),

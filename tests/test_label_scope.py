@@ -132,7 +132,12 @@ def test_one_session_builder_and_one_label_composition():
     to the caller, is called once, by the test that releases that cache
     (perfbench/, not scanned here, calls it too).  One dedup answer: in
     engine/ and jobs/ only pipeline.py calls `with_dup_flags`, and no
-    module keeps dup state in a stateful stream operator."""
+    module keeps dup state in a stateful stream operator.  The incremental
+    path scores once: in engine/ and jobs/ only the fused pass
+    (pipeline.py), Stage A (lineage.py), the stream's micro-batch
+    (stream_pipeline.py) and refit call `score_clips`, and no job calls
+    `labeled`, so reconcile labels the stream's scored rows instead of
+    scoring the corpus again."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = re.compile(r"SparkSession\s*\.\s*" + "builder")
     composition = re.compile(
@@ -142,9 +147,11 @@ def test_one_session_builder_and_one_label_composition():
     unscoped = re.compile(r"^(?!\s*def ).*\brun_pipeline\(", re.M)
     dedup_call = re.compile(r"^(?!\s*def ).*\bwith_dup_flags\(", re.M)
     stateful = re.compile(r"\bapplyInPandasWithState\b")
+    scorer = re.compile(r"^(?!\s*def ).*\bscore_clips\(", re.M)
+    labeled_call = re.compile(r"^(?!\s*def ).*\blabeled\(", re.M)
     pipeline_py = os.path.join("engine", "operators", "pipeline.py")
     builders, composers, switched, unscoped_calls = [], [], [], []
-    deduppers, state_users = [], []
+    deduppers, state_users, scorers, job_pinners = [], [], [], []
     for rel, text in _py_sources(root):
         if builder.search(text):
             builders.append(rel)
@@ -155,6 +162,10 @@ def test_one_session_builder_and_one_label_composition():
                 deduppers.append(rel)
             if stateful.search(text):
                 state_users.append(rel)
+            if scorer.search(text):
+                scorers.append(rel)
+        if rel.startswith("jobs" + os.sep) and labeled_call.search(text):
+            job_pinners.append(rel)
         if dups_switch.search(text):
             switched.append(rel)
         if rel != pipeline_py:
@@ -165,3 +176,8 @@ def test_one_session_builder_and_one_label_composition():
     assert unscoped_calls == [os.path.join("tests", "test_label_scope.py")]
     assert deduppers == [pipeline_py]
     assert state_users == []
+    assert sorted(scorers) == sorted([
+        pipeline_py, os.path.join("engine", "lineage.py"),
+        os.path.join("engine", "streaming", "stream_pipeline.py"),
+        os.path.join("jobs", "refit_thresholds.py")])
+    assert job_pinners == []

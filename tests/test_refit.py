@@ -9,6 +9,30 @@ from engine import refit
 from engine.operators import pipeline, scoring
 
 
+# refit_thresholds uses the DP only through propose_strata; these helpers
+# expose its pieces one at a time, so each is checked on its own
+
+
+def _kmeans_wss(centers, counts, k: int) -> float:
+    """Exact weighted 1-D k-means SSE at one k."""
+    return refit._kmeans_dp(centers, counts, k)[0][k - 1]
+
+
+def _kmeans_boundaries(centers, counts, k: int) -> list[float]:
+    """Exact 1-D k-means segmentation -> boundaries between the k
+    clusters (fewer when fewer than k bins are occupied)."""
+    _wss, back = refit._kmeans_dp(centers, counts, k)
+    return refit._boundaries_from_back(centers, counts, back, k)
+
+
+def _cluster_diagnostics(centers, counts, k_max: int = 6) -> dict:
+    """Exact WSS for k = 1..k_max and its curvature elbow."""
+    wss = refit._kmeans_dp(centers, counts, k_max)[0]
+    return {"k": list(range(1, k_max + 1)),
+            "wss": [round(v, 6) for v in wss],
+            "elbow_k": refit._elbow_from_wss(wss)}
+
+
 def test_kmeans2_boundary_separates_two_modes():
     centers = np.linspace(0, 10, 100)
     counts = np.zeros(100, dtype=np.int64)
@@ -112,10 +136,10 @@ def test_optimal_1d_kmeans_wss_exact_small():
     best2 = min(sse(range(0, i)) + sse(range(i, n)) for i in range(1, n))
     best3 = min(sse(range(0, i)) + sse(range(i, j)) + sse(range(j, n))
                 for i, j in itertools.combinations(range(1, n), 2))
-    assert abs(refit.optimal_1d_kmeans_wss(x, w, 2) - best2) < 1e-9
-    assert abs(refit.optimal_1d_kmeans_wss(x, w, 3) - best3) < 1e-9
+    assert abs(_kmeans_wss(x, w, 2) - best2) < 1e-9
+    assert abs(_kmeans_wss(x, w, 3) - best3) < 1e-9
     # monotone non-increasing in k
-    wss = [refit.optimal_1d_kmeans_wss(x, w, k) for k in range(1, 5)]
+    wss = [_kmeans_wss(x, w, k) for k in range(1, 5)]
     assert all(a >= b - 1e-12 for a, b in zip(wss, wss[1:]))
 
 
@@ -134,8 +158,8 @@ def test_cluster_diagnostics_elbow_finds_true_k():
         counts += (1000 * np.exp(-((centers - mode) ** 2)
                                  / (2 * spread ** 2))).astype(np.int64)
         del idx
-    d1 = refit.cluster_diagnostics(centers, counts, k_max=6)
-    d2 = refit.cluster_diagnostics(centers, counts, k_max=6)
+    d1 = _cluster_diagnostics(centers, counts, k_max=6)
+    d2 = _cluster_diagnostics(centers, counts, k_max=6)
     assert d1 == d2  # deterministic
     assert d1["elbow_k"] == 3
     assert d1["wss"][2] < 0.1 * d1["wss"][0]  # k=3 explains the structure
@@ -183,8 +207,8 @@ def test_kmeans_boundaries_exact_and_consistent():
 
     x = np.array([0.0, 1.0, 2.0, 10.0, 11.0, 20.0])
     w = np.array([2, 1, 1, 3, 1, 2], dtype=np.int64)
-    assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
-    b3 = refit.kmeans_boundaries(x, w, 3)
+    assert _kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
+    b3 = _kmeans_boundaries(x, w, 3)
     # optimal 3-segmentation is {0,1,2} | {10,11} | {20}: boundaries are
     # midpoints of adjacent weighted segment means (0.75, 10.25, 20.0)
     assert np.allclose(b3, [(0.75 + 10.25) / 2, (10.25 + 20.0) / 2])
@@ -243,7 +267,7 @@ def test_propose_strata_diagnostics_shape_matches_cluster_diagnostics():
                          ([40], 3)):
         c, n = _modal_histogram(modes)
         got = refit.propose_strata(c, n, k_max=k_max)["diagnostics"]
-        exp = refit.cluster_diagnostics(c, n, k_max=k_max)
+        exp = _cluster_diagnostics(c, n, k_max=k_max)
         assert got["k"] == exp["k"] == list(range(1, k_max + 1))
         assert len(got["wss"]) == len(exp["wss"]) == k_max
         assert got["wss"] == exp["wss"]
@@ -264,19 +288,19 @@ def test_kmeans_boundaries_degenerate_matches_kmeans2():
 
     x = np.linspace(0, 10, 8)
     w = np.zeros(8, dtype=np.int64)
-    assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
-    assert refit.kmeans_boundaries(x, w, 4) == [float(x[4])] * 3
+    assert _kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
+    assert _kmeans_boundaries(x, w, 4) == [float(x[4])] * 3
 
     one = w.copy()
     one[0] = 5
-    assert refit.kmeans_boundaries(x, one, 2) == [refit.kmeans2_boundary(x, one)]
-    assert refit.kmeans_boundaries(x, one, 4) == [float(x[4])] * 3
+    assert _kmeans_boundaries(x, one, 2) == [refit.kmeans2_boundary(x, one)]
+    assert _kmeans_boundaries(x, one, 4) == [float(x[4])] * 3
     assert refit.propose_strata(x, one)["boundaries"] == []
 
     two = one.copy()
     two[5] = 3
     for k in (2, 4, 7):
-        assert refit.kmeans_boundaries(x, two, k) == [refit.kmeans2_boundary(x, two)]
+        assert _kmeans_boundaries(x, two, k) == [refit.kmeans2_boundary(x, two)]
     p = refit.propose_strata(x, two)
     assert p["k"] == 2 and len(p["boundaries"]) == 1
 
@@ -298,9 +322,9 @@ def test_boundaries_strictly_increasing_on_sparse_histograms():
         if occupied < 2:
             continue
         for k in range(2, 8):
-            b = refit.kmeans_boundaries(x, w, k)
+            b = _kmeans_boundaries(x, w, k)
             assert len(b) == min(k, occupied) - 1, (x, w, k, b)
             assert all(lo < hi for lo, hi in zip(b, b[1:])), (x, w, k, b)
-        assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
+        assert _kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
         p = refit.propose_strata(x, w)
         assert len(p["boundaries"]) == p["k"] - 1 <= occupied - 1

@@ -11,16 +11,24 @@ from engine.operators import pipeline
 from engine.streaming import stream_pipeline
 
 
-def test_stream_matches_batch_per_clip_rules(spark, clips_t1, tmp_path):
+@pytest.fixture(scope="module")
+def stream_t1(spark, clips_t1, tmp_path_factory):
+    """clips_t1 streamed through `start_stream` (availableNow); returns the
+    stream's output dir, whose labels/ and scored/rule_version=*/ each
+    hold one batch_id=* dir per micro-batch."""
     path, _, _ = clips_t1
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = stream_pipeline.start_stream(spark, path, out, ckpt,
-                                     available_now=True)
+    root = tmp_path_factory.mktemp("stream_t1")
+    out = str(root / "stream_out")
+    q = stream_pipeline.start_stream(
+        spark, path, out, str(root / "ckpt"), available_now=True)
     q.awaitTermination(300)
+    assert q.exception() is None
+    return out
 
-    got = (spark.read.parquet(f"{out}/labels")
+
+def test_stream_matches_batch_per_clip_rules(spark, clips_t1, stream_t1):
+    path, _, _ = clips_t1
+    got = (spark.read.parquet(f"{stream_t1}/labels")
            .toPandas().sort_values("clip_id").reset_index(drop=True))
     with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
         batch = labels.toPandas().sort_values("clip_id") \
@@ -148,33 +156,22 @@ def test_windowed_watermark_finalization(spark, tmp_path):
     assert got[(got["event_type"] == "view")].empty
 
 
-@pytest.fixture(scope="module")
-def stream_t1(spark, clips_t1, tmp_path_factory):
-    """clips_t1 streamed through `start_stream` (availableNow); returns the
-    stream's output dir, whose labels/ holds one batch_id=* dir per
-    micro-batch."""
-    path, _, _ = clips_t1
-    root = tmp_path_factory.mktemp("stream_t1")
-    out = str(root / "stream_out")
-    q = stream_pipeline.start_stream(
-        spark, path, out, str(root / "ckpt"), available_now=True)
-    q.awaitTermination(300)
-    assert q.exception() is None
-    return out
-
-
 def test_reconcile_corrects_cross_batch_dups_only(spark, clips_t1, stream_t1,
                                                   tmp_path):
     """Lambda-split closure: stream ingest (within-batch dedup only) then
-    the reconcile job -> corrected labels equal the pure-batch answer, and
-    every flip is duplicate-rule related (cross-batch dup pairs the stream
-    could not see); no cache outlives it."""
+    the reconcile job over the stream's scored rows -> corrected labels
+    equal the pure-batch answer, every flip is duplicate-rule related
+    (cross-batch dup pairs the stream could not see), and they form one
+    flat table with at most one file per part_id; no cache outlives it."""
+    import glob
+
     import jobs.reconcile_dups as rd
     from engine import schema
+    from engine.streaming import reconcile
 
     path, _, _ = clips_t1
     out = str(tmp_path / "reconciled")
-    _, n_bad = rd.reconcile(spark, path, f"{stream_t1}/labels", out)
+    _, n_bad = rd.reconcile(spark, stream_t1, out)
     assert n_bad == 0
 
     # corrected == pure batch answer on keep/drop for every clip
@@ -186,21 +183,34 @@ def test_reconcile_corrects_cross_batch_dups_only(spark, clips_t1, stream_t1,
             .sort_values("clip_id").reset_index(drop=True)
     assert b.equals(b2)
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    # the labels come from the stream's scored rows: no Python crossing
+    plan = (pipeline.label(reconcile.scored_batches(spark, stream_t1))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "MapInPandas" not in plan and "Python" not in plan
+
+    # the stream wrote one directory per micro-batch; the corrected labels
+    # are flat part_id dirs with at most one file each
+    assert len(glob.glob(f"{stream_t1}/labels/batch_id=*")) > 1
+    assert not glob.glob(f"{out}/labels/batch_id=*")
+    part_dirs = glob.glob(f"{out}/labels/part_id=*")
+    assert part_dirs
+    for d in part_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1
 
 
-def test_reconcile_refuses_non_dup_flip(spark, clips_t1, stream_t1,
-                                        tmp_path):
+def test_reconcile_refuses_non_dup_flip(spark, stream_t1, tmp_path):
     """A flip no dup rule explains is counted as unexplained, which makes
     the job exit non-zero.  Planted: one clip the stream dropped for a
     per-row rule is relabelled kept.  Per-row rules precede the dup rules
     in RULE_ORDER, so the batch answer drops it for the same reason and the
     flip cannot be dup-related."""
+    import shutil
+
     from pyspark.sql import functions as F
 
     import jobs.reconcile_dups as rd
     from engine.streaming import reconcile
 
-    path, _, _ = clips_t1
     stream = spark.read.parquet(f"{stream_t1}/labels")
     victim = (stream.where(~F.col("keep")
                            & ~F.col("drop_reason").isin(*reconcile.DUP_RULES))
@@ -208,47 +218,44 @@ def test_reconcile_refuses_non_dup_flip(spark, clips_t1, stream_t1,
     assert victim is not None
     hit = F.col("clip_id") == victim
     tampered = str(tmp_path / "tampered")
+    shutil.copytree(f"{stream_t1}/scored", f"{tampered}/scored")
     (stream
      .withColumn("keep", F.col("keep") | hit)
      .withColumn("drop_reason",
                  F.when(hit, F.lit(None)).otherwise(F.col("drop_reason")))
-     .write.partitionBy("batch_id").parquet(tampered))
+     .write.partitionBy("batch_id").parquet(f"{tampered}/labels"))
 
     out = str(tmp_path / "reconciled")
-    _, n_bad = rd.reconcile(spark, path, tampered, out)
+    _, n_bad = rd.reconcile(spark, tampered, out)
     assert n_bad == 1
     bad = (spark.read.parquet(f"{out}/diff").where(~F.col("dup_related"))
            .select("clip_id").collect())
     assert [r["clip_id"] for r in bad] == [victim]
 
 
-def test_compact_labels_canonicalizes_stream_output(spark, stream_t1,
-                                                    tmp_path):
-    """Compaction folds the per-batch label dirs into one partitioned
-    table with the same rows, fewer files, and highest-batch-id wins on
-    (hypothetical) duplicate clip_ids."""
-    import glob
+def test_reconcile_refuses_batch_without_current_scored_rows(spark, stream_t1,
+                                                           tmp_path):
+    """A labels batch whose scored rows sit under another rule_version (a
+    stream written by an older engine) is refused before any data is read
+    or written, naming the batch: reconcile never mixes rule versions."""
+    import os
+    import shutil
 
-    import jobs.compact_labels as cl
+    import jobs.reconcile_dups as rd
 
-    src = f"{stream_t1}/labels"
-    before = spark.read.parquet(src)
-    compacted = cl.compact(spark, src, str(tmp_path / "canonical"))
+    stale = str(tmp_path / "stale")
+    for sub in ("labels", "scored"):
+        shutil.copytree(f"{stream_t1}/{sub}", f"{stale}/{sub}")
+    current = stream_pipeline.scored_dir(stale)
+    old = f"{stale}/scored/rule_version=0000000000000000"
+    os.makedirs(old)
+    os.rename(f"{current}/batch_id=1", f"{old}/batch_id=1")
 
-    assert compacted.count() == before.count()
-    a = (before.select("clip_id", "keep", "drop_reason").toPandas()
-         .sort_values("clip_id").reset_index(drop=True))
-    b = (compacted.select("clip_id", "keep", "drop_reason").toPandas()
-         .sort_values("clip_id").reset_index(drop=True))
-    assert a.equals(b)
-    # source: one directory per micro-batch; canonical: flat part_id dirs
-    # with at most one file each (the compaction's whole point)
-    assert len(glob.glob(f"{src}/batch_id=*")) > 1
-    assert not glob.glob(str(tmp_path / "canonical") + "/batch_id=*")
-    part_dirs = glob.glob(str(tmp_path / "canonical") + "/part_id=*")
-    assert part_dirs
-    for d in part_dirs:
-        assert len(glob.glob(f"{d}/*.parquet")) == 1
+    out = str(tmp_path / "reconciled")
+    with pytest.raises(ValueError, match=r"labels batches \[1\] have no "
+                                         r"scored batch at rule_version"):
+        rd.reconcile(spark, stale, out)
+    assert not os.path.exists(out)
 
 
 def test_session_boundary(spark):
