@@ -346,8 +346,8 @@ SELECT query_id, rank, clip_id, mel_cos FROM (
 
 
 def _q_clips_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Step6-graft corpus evaluation: per-language keep/drop/scrub report
-    via the salted two-phase aggregation (rows-only)."""
+    """Step6-graft corpus evaluation: per-language keep/drop/scrub report,
+    one aggregation of the label counts per language (rows-only)."""
     from engine.operators import evaluation
 
     return evaluation.corpus_report(_labels_df(spark)).drop("drop_reason_counts")

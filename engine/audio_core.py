@@ -578,17 +578,3 @@ def resample_linear(pcm: np.ndarray, sr_from: int, sr_to: int) -> np.ndarray:
     pos = np.arange(n_out, dtype=np.float64) * (pcm.size - 1) / max(n_out - 1, 1)
     out = np.interp(pos, np.arange(pcm.size), pcm.astype(np.float32))
     return np.clip(np.rint(out), -32768, 32767).astype("<i2")
-
-
-def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
-    """SNR of decoded (int16-normalized) vs the float reference signal."""
-    ref = np.asarray(reference, dtype=np.float64)
-    dec = np.asarray(decoded, dtype=np.float64) / INT16_FULL_SCALE
-    m = min(ref.size, dec.size)
-    ref, dec = ref[:m], dec[:m]
-    noise = ref - dec
-    p_sig = float(np.mean(ref * ref))
-    p_noise = float(np.mean(noise * noise))
-    if p_noise == 0.0:
-        return float("inf")
-    return 10.0 * np.log10(p_sig / p_noise)

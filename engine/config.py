@@ -188,7 +188,7 @@ RULE_ORDER = (
 # ---------------------------------------------------------------------------
 
 N_PARTS = 64                   # part_id = pmod(xxhash64(clip_id), N_PARTS)
-N_SALT = 16                    # salt buckets for skewed per-language aggs
+N_SALT = 16                    # salt buckets for dedup's null-checksum window
 
 # Arrow batch size for the fused UDF: payloads are ~100 KB+ of PCM per row,
 # so cap rows/batch to keep each Arrow batch ~64 MB.

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from itertools import chain
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
@@ -40,26 +40,38 @@ def to_labels(df: DataFrame) -> DataFrame:
     return df.select(*LABEL_COLUMNS)
 
 
-def lineage_metrics(labels: DataFrame) -> DataFrame:
-    """Per-partition lineage/metrics rows (FIXTURES.md Table 3) — graft of
-    the per-user issue counts of Step6-Evaluation.R:7-39 at the engine's
-    checkpoint granularity.  One aggregation: every rule's drop count is
-    summed as its own `_n_<RULE>` column, then folded into a map that keeps
-    only the reasons that occurred (empty for a part with no drops)."""
-    agg = labels.groupBy("part_id").agg(
+def label_counts() -> list[Column]:
+    """The label counts as aggregate Columns: n_total, n_kept, n_dropped,
+    n_scrubbed, n_repaired and one `_n_<RULE>` drop count per rule — the
+    per-user issue counts of Step6-Evaluation.R:7-39, defined once for the
+    lineage rows and both corpus reports.  Every count is a `count_if`, so
+    a group with no such row reads 0, never null.  All are algebraic, so
+    Spark's partial aggregation merges them map-side before the shuffle."""
+    return [
         F.count("*").alias("n_total"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
-        F.sum((F.col("n_scrub_hits") > 0).cast("long")).alias("n_scrubbed"),
-        F.sum(F.col("repaired").cast("long")).alias("n_repaired"),
+        F.count_if(F.col("keep")).alias("n_kept"),
+        F.count_if(~F.col("keep")).alias("n_dropped"),
+        F.count_if(F.col("n_scrub_hits") > 0).alias("n_scrubbed"),
+        F.count_if(F.col("repaired")).alias("n_repaired"),
         *(F.count_if(F.col("drop_reason") == r).alias(f"_n_{r}")
-          for r in config.RULE_ORDER))
-    reason_counts = F.map_filter(
-        F.map_from_arrays(
-            F.array(*(F.lit(r) for r in config.RULE_ORDER)),
-            F.array(*(F.col(f"_n_{r}") for r in config.RULE_ORDER))),
-        lambda _, n: n > 0)
-    return agg.select(
+          for r in config.RULE_ORDER)]
+
+
+def reason_counts() -> Column:
+    """rule -> drop count map over label_counts()' `_n_<RULE>` columns."""
+    return F.map_from_arrays(
+        F.array(*(F.lit(r) for r in config.RULE_ORDER)),
+        F.array(*(F.col(f"_n_{r}") for r in config.RULE_ORDER)))
+
+
+def lineage_metrics(labels: DataFrame) -> DataFrame:
+    """Per-partition lineage/metrics rows (FIXTURES.md Table 3): the label
+    counts per part_id in one aggregation, the reason map keeping only the
+    reasons that occurred (empty for a part with no drops)."""
+    return labels.groupBy("part_id").agg(*label_counts()).select(
         "part_id", F.lit("committed").alias("status"), "n_total", "n_kept",
-        "n_dropped", reason_counts.alias("drop_reason_counts"), "n_scrubbed",
-        "n_repaired", F.lit(config.rule_version()).alias("rule_version"))
+        "n_dropped",
+        F.map_filter(reason_counts(), lambda _, n: n > 0)
+        .alias("drop_reason_counts"),
+        "n_scrubbed", "n_repaired",
+        F.lit(config.rule_version()).alias("rule_version"))

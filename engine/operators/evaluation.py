@@ -5,17 +5,15 @@ error-rate tables (Step6:7-39, split-by-UserId counting loops) and
 before/after distribution comparisons (Step6:100-127).  The engine's analog
 is a per-language quality report over the labels table: keep rate, per-rule
 drop counts, scrub rate, score means — the numbers a corpus owner reads
-after a cleaning run.
+after a cleaning run.  The counts are decision.label_counts, the same ones
+the lineage rows carry.
 
 Skew (north_rule: explicit handling): at 10^12 rows a head language can be
-~50% of the corpus (LANG_WEIGHTS plants exactly that skew in the fixtures),
-so `lang` is precisely the kind of key AQE's skew-join splitting does NOT
-help with (it is an aggregation, not a join).  The report therefore runs as
-a TWO-PHASE SALTED aggregation: partial agg on (lang, salt) with
-salt = pmod(xxhash64(clip_id), N_SALT) — every reducer holds at most
-1/N_SALT of the head key — then a final, cheap agg of N_SALT partial rows
-per language.  All measures are algebraic (counts/sums), so the two-phase
-split is exact, and a unit test asserts salted == unsalted.
+~50% of the corpus (LANG_WEIGHTS plants exactly that skew in the fixtures).
+Every measure is algebraic (counts and sums), so Spark's partial
+aggregation merges each task's rows map-side: the `lang` shuffle carries
+one partial row per (task, language), and the head language's reducer
+merges as many rows as there are tasks, not half the corpus.
 """
 
 from __future__ import annotations
@@ -23,65 +21,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import config
+from . import decision
 
 
-def _measures() -> list:
-    """Algebraic partial measures (sums/counts only — mergeable)."""
-    m = [
-        F.count("*").alias("n_total"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.sum((F.col("n_scrub_hits") > 0).cast("long")).alias("n_scrubbed"),
-        # score means over KEPT rows only — the "after cleaning" view
-        # (dropped rows carry sentinel scores, e.g. ppl 1e9 for empty text)
-        F.sum(F.when(F.col("keep"), F.col("ppl_score")).otherwise(F.lit(0.0)))
-        .alias("_ppl_sum"),
-        F.sum((F.col("keep") & F.col("ppl_score").isNotNull()).cast("long"))
-        .alias("_ppl_n"),
-        F.sum(F.when(F.col("keep"), F.col("silence_ratio")).otherwise(F.lit(0.0)))
-        .alias("_sil_sum"),
-        F.sum((F.col("keep") & F.col("silence_ratio").isNotNull()).cast("long"))
-        .alias("_sil_n"),
-    ]
-    for rule in config.RULE_ORDER:
-        m.append(F.sum((F.col("drop_reason") == rule).cast("long"))
-                 .alias(f"_n_{rule}"))
-    return m
-
-
-def corpus_report(labels: DataFrame, salted: bool = True) -> DataFrame:
+def corpus_report(labels: DataFrame) -> DataFrame:
     """labels -> one row per lang: keep rate, drop_reason counts map,
     scrub rate, mean ppl / silence_ratio (Step6:7-39, 100-127 analog)."""
-    if salted:
-        partial = (labels
-                   .withColumn("_salt", F.pmod(F.xxhash64("clip_id"),
-                                               F.lit(config.N_SALT)))
-                   .groupBy("lang", "_salt")
-                   .agg(*_measures()))
-        sums = [F.sum(c).alias(c) for c in partial.columns
-                if c not in ("lang", "_salt")]
-        agg = partial.groupBy("lang").agg(*sums)
-    else:
-        agg = labels.groupBy("lang").agg(*_measures())
-
-    reason_map = F.map_from_arrays(
-        F.array(*[F.lit(r) for r in config.RULE_ORDER]),
-        F.array(*[F.col(f"_n_{r}") for r in config.RULE_ORDER]))
+    # score means over KEPT rows only — the "after cleaning" view
+    # (dropped rows carry sentinel scores, e.g. ppl 1e9 for empty text)
+    agg = labels.groupBy("lang").agg(
+        *decision.label_counts(),
+        F.avg(F.when(F.col("keep"), F.col("ppl_score"))).alias("_ppl"),
+        F.avg(F.when(F.col("keep"), F.col("silence_ratio"))).alias("_sil"))
     return (agg
-            .withColumn("keep_rate",
-                        F.round(F.col("n_kept") / F.col("n_total"), 6))
-            .withColumn("scrub_rate",
-                        F.round(F.col("n_scrubbed") / F.col("n_total"), 6))
-            .withColumn("avg_ppl_kept",
-                        F.when(F.col("_ppl_n") > 0,
-                               F.round(F.col("_ppl_sum") / F.col("_ppl_n"), 4)))
-            .withColumn("avg_silence_kept",
-                        F.when(F.col("_sil_n") > 0,
-                               F.round(F.col("_sil_sum") / F.col("_sil_n"), 4)))
-            .withColumn("drop_reason_counts", reason_map)
-            .select("lang", "n_total", "n_kept", "keep_rate", "n_scrubbed",
-                    "scrub_rate", "avg_ppl_kept", "avg_silence_kept",
-                    "drop_reason_counts")
+            .select("lang", "n_total", "n_kept",
+                    F.round(F.col("n_kept") / F.col("n_total"), 6)
+                    .alias("keep_rate"),
+                    "n_scrubbed",
+                    F.round(F.col("n_scrubbed") / F.col("n_total"), 6)
+                    .alias("scrub_rate"),
+                    F.round("_ppl", 4).alias("avg_ppl_kept"),
+                    F.round("_sil", 4).alias("avg_silence_kept"),
+                    decision.reason_counts().alias("drop_reason_counts"))
             .orderBy("lang"))
 
 
@@ -109,11 +70,7 @@ def corpus_report_by_dim(labels: DataFrame, dim: DataFrame,
                 .join(F.broadcast(dim), "speaker_id", "left")
                 .withColumn("region", F.coalesce("region", F.lit("<unknown>")))
                 .withColumn("device", F.coalesce("device", F.lit("<unknown>"))))
-    agg = enriched.groupBy("region", "device").agg(
-        F.count("*").alias("n_total"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.sum((F.col("n_scrub_hits") > 0).cast("long")).alias("n_scrubbed"),
-        F.sum(F.col("repaired").cast("long")).alias("n_repaired"))
+    agg = enriched.groupBy("region", "device").agg(*decision.label_counts())
     return (agg
             .withColumn("keep_rate",
                         F.round(F.col("n_kept") / F.col("n_total"), 6))

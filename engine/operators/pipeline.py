@@ -11,8 +11,9 @@ Catalyst fuses our scan + UDF + flag projection into a single stage.
 
 `label` is that fixed composition after scoring.  Every path goes through
 it: the in-memory pass (`labeled`, `run_pipeline`), each micro-batch of
-the stream (streaming.stream_pipeline.start_stream, through `labeled`) and
-Stage B of the checkpointed job (lineage.run_checkpointed).
+the stream (streaming.stream_pipeline.start_stream, over the scored batch
+it has just written), Stage B of the checkpointed job
+(lineage.run_checkpointed) and the stream's reconcile job.
 
 The scored table is pinned before dedup: dedup references it from three
 plan branches (main + both sides of the band self-join), and without a

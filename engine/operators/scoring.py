@@ -8,7 +8,7 @@ Design notes (scale-first):
     round-trip instead of four (UDFs are the slow path — everything else in
     the pipeline is native Column expressions).
   * `bytes` never comes back.  The UDF consumes the audio payload and emits
-    only scalar features + an md5 checksum, so every downstream stage
+    only scalar features + a blake2b-128 checksum, so every downstream stage
     (dedup joins, decision, sink) moves ~100 bytes/row instead of ~100 KB —
     the single most important data-volume decision at 10^12-clip scale.
     (Graft of the reference carrying decoded routes in a side structure

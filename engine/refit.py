@@ -11,8 +11,8 @@ fitted on a different distribution.
 Method, chosen for scale AND determinism:
 
   1. One distributed aggregation builds a fixed-width histogram per score
-     column (the only pass over the data — works identically at 10^12
-     rows; bin counts are exact, order-independent sums).
+     column, all columns at once (works identically at 10^12 rows; bin
+     counts are exact, order-independent sums).
   2. Exact 1-D 2-means on the histogram bins (driver-side, O(n_bins) with
      prefix sums): the boundary between the two clusters is the candidate
      threshold.  For one-dimensional cutoffs this dominates pyspark.ml
@@ -20,7 +20,7 @@ Method, chosen for scale AND determinism:
      corpus always yields the same proposal (unit-tested), while the
      reference's gamlssMX/kmeans fits are seed-lottery affairs.
   3. Exact distribution percentiles ride along as guardrail context in
-     the emitted proposal.
+     the emitted proposal, from one more pass: two Spark actions in all.
 
 The proposal is a JSON-able dict stamped with rule_version, corpus size
 and histogram parameters — `jobs/refit_thresholds.py` ships it.
@@ -29,7 +29,7 @@ and histogram parameters — `jobs/refit_thresholds.py` ships it.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import config
@@ -37,22 +37,34 @@ from . import config
 N_BINS = 512
 
 
-def score_histogram(df: DataFrame, col: str, lo: float, hi: float,
-                    n_bins: int = N_BINS) -> tuple[np.ndarray, np.ndarray]:
-    """-> (bin_centers, counts): one exact distributed agg; values outside
-    [lo, hi] clamp into the edge bins (so e.g. the ppl sentinel for empty
-    text lands in the top bin instead of stretching the grid)."""
-    width = (hi - lo) / n_bins
-    b = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), F.floor(
-        (F.col(col) - F.lit(lo)) / F.lit(width)).cast("int")))
-    rows = (df.where(F.col(col).isNotNull())
-            .groupBy(b.alias("bin")).agg(F.count("*").alias("n"))
+def score_histograms(df: DataFrame, ranges: dict[str, tuple[float, float]],
+                     n_bins: int = N_BINS) -> tuple[int, dict]:
+    """-> (n_rows, {col: (bin_centers, counts)}) for every `col: (lo, hi)`
+    in `ranges`, from ONE exact distributed agg over exploded (score, bin)
+    cells; values outside [lo, hi] clamp into the edge bins (so e.g. the
+    ppl sentinel for empty text lands in the top bin instead of stretching
+    the grid).  Nulls go to a null bin, which only n_rows counts."""
+    def cell(col: str, lo: float, hi: float) -> Column:
+        width = (hi - lo) / n_bins
+        b = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), F.floor(
+            (F.col(col) - F.lit(lo)) / F.lit(width)).cast("int")))
+        # greatest() skips nulls: without the guard a null lands in bin 0
+        return F.struct(F.lit(col).alias("score"),
+                        F.when(F.col(col).isNotNull(), b).alias("bin"))
+
+    cells = F.array(*(cell(c, lo, hi) for c, (lo, hi) in ranges.items()))
+    rows = (df.select(F.explode(cells).alias("c"))
+            .groupBy("c.score", "c.bin").count()
             .collect())
-    counts = np.zeros(n_bins, dtype=np.int64)
+    first = next(iter(ranges))
+    n_rows = sum(r["count"] for r in rows if r["score"] == first)
+    counts = {c: np.zeros(n_bins, dtype=np.int64) for c in ranges}
     for r in rows:
-        counts[r["bin"]] = r["n"]
-    centers = lo + (np.arange(n_bins) + 0.5) * width
-    return centers, counts
+        if r["bin"] is not None:
+            counts[r["score"]][r["bin"]] = r["count"]
+    return n_rows, {
+        c: (lo + (np.arange(n_bins) + 0.5) * ((hi - lo) / n_bins), counts[c])
+        for c, (lo, hi) in ranges.items()}
 
 
 def kmeans2_boundary(centers: np.ndarray, counts: np.ndarray) -> float:
@@ -93,20 +105,23 @@ EXACT_PERCENTILE_MAX_ROWS = 10_000_000
 APPROX_PERCENTILE_ACCURACY = 10_000
 
 
-def _percentiles(df: DataFrame, col: str, ps: list[float],
+def _percentiles(df: DataFrame, ps: dict[str, list[float]],
                  n_rows: int | None = None,
-                 exact: bool | None = None) -> list[float]:
-    """Guardrail percentiles: exact for small corpora, sketch above
+                 exact: bool | None = None) -> dict[str, list[float]]:
+    """Guardrail percentiles of every `col: ps` in one select (nulls are
+    skipped): exact for small corpora, sketch above
     EXACT_PERCENTILE_MAX_ROWS (or forced via `exact`)."""
     if exact is None:
         exact = n_rows is not None and n_rows <= EXACT_PERCENTILE_MAX_ROWS
-    arr = ", ".join(map(str, ps))
-    expr = (f"percentile({col}, array({arr}))" if exact else
-            f"percentile_approx({col}, array({arr}), "
-            f"{APPROX_PERCENTILE_ACCURACY})")
-    row = (df.where(F.col(col).isNotNull())
-           .select(F.expr(expr).alias("p")).first())
-    return [float(v) for v in row["p"]]
+
+    def expr(col: str, qs: list[float]) -> Column:
+        arr = ", ".join(map(str, qs))
+        return F.expr(f"percentile({col}, array({arr}))" if exact else
+                      f"percentile_approx({col}, array({arr}), "
+                      f"{APPROX_PERCENTILE_ACCURACY})").alias(col)
+
+    row = df.select(*(expr(c, qs) for c, qs in ps.items())).first()
+    return {c: [float(v) for v in row[c]] for c in ps}
 
 
 def _kmeans_dp(centers: np.ndarray, counts: np.ndarray,
@@ -268,26 +283,22 @@ def fuzzy_membership_cols(value, centers: list[float]):
 def refit_thresholds(scored: DataFrame) -> dict:
     """scored (scoring.score_clips output or the checkpointed scored
     table) -> provenance-stamped threshold proposal dict."""
-    n_rows = scored.count()
-
     # perplexity: clamp the histogram at 4x the frozen cutoff — the empty-
     # transcript sentinel (1e9) must not stretch the grid; it clamps into
     # the top bin and anchors the high cluster
-    ppl_hi = float(config.PPL_MAX * 4)
-    c, n = score_histogram(scored, "ppl_score", 0.0, ppl_hi)
-    ppl_cut = kmeans2_boundary(c, n)
-    ppl_strata = propose_strata(c, n)
+    n_rows, hists = score_histograms(scored, {
+        "ppl_score": (0.0, float(config.PPL_MAX * 4)),
+        "lid_margin": (0.0, 4.0),
+        "silence_ratio": (0.0, 1.0)})
+    pcts = _percentiles(scored, {"ppl_score": [0.5, 0.9, 0.99],
+                                 "lid_margin": [0.01, 0.1, 0.5]}, n_rows)
+    ppl_cut = kmeans2_boundary(*hists["ppl_score"])
+    ppl_strata = propose_strata(*hists["ppl_score"])
     ppl_diag = ppl_strata["diagnostics"]
-    ppl_pcts = _percentiles(scored, "ppl_score", [0.5, 0.9, 0.99], n_rows)
-
-    c, n = score_histogram(scored, "lid_margin", 0.0, 4.0)
-    lid_cut = kmeans2_boundary(c, n)
-    lid_strata = propose_strata(c, n)
+    lid_cut = kmeans2_boundary(*hists["lid_margin"])
+    lid_strata = propose_strata(*hists["lid_margin"])
     lid_diag = lid_strata["diagnostics"]
-    lid_pcts = _percentiles(scored, "lid_margin", [0.01, 0.1, 0.5], n_rows)
-
-    c, n = score_histogram(scored, "silence_ratio", 0.0, 1.0)
-    sil_cut = kmeans2_boundary(c, n)
+    sil_cut = kmeans2_boundary(*hists["silence_ratio"])
 
     return {
         "method": "fixed-width histogram (1 distributed agg/score) + "
@@ -306,8 +317,9 @@ def refit_thresholds(scored: DataFrame) -> dict:
             "SILENCE_RATIO_MAX": round(sil_cut, 4),
         },
         "context": {
-            "ppl_p50_p90_p99": [round(v, 4) for v in ppl_pcts],
-            "lid_margin_p01_p10_p50": [round(v, 4) for v in lid_pcts],
+            "ppl_p50_p90_p99": [round(v, 4) for v in pcts["ppl_score"]],
+            "lid_margin_p01_p10_p50": [round(v, 4)
+                                       for v in pcts["lid_margin"]],
         },
         # M6 graft: cluster-count diagnostics per fitted score (wss scan +
         # curvature elbow over the same histograms — no extra corpus pass)

@@ -6,8 +6,9 @@ Ship (north_rule):
         jobs/eval_report.py --labels /path/out/labels [--out /path/report]
 
 Reads the labels written by jobs/run_pipeline.py, prints the per-language
-keep/drop/scrub report (salted two-phase aggregation,
-engine/operators/evaluation.py), and optionally writes it as parquet.
+keep/drop/scrub report (one aggregation of decision.label_counts per
+language, engine/operators/evaluation.py), and optionally writes it as
+parquet.
 Graft of the reference's evaluation pass: per-user error-rate tables
 (Step6-Evaluation.R:7-39) + before/after comparison (Step6:100-127).
 """
@@ -24,12 +25,12 @@ def main() -> int:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    from engine import session
+    from engine import schema, session
     from engine.operators import evaluation
 
     spark = session.get_or_create("clip-quality-eval-report")
 
-    labels = spark.read.parquet(args.labels)
+    labels = spark.read.schema(schema.LABELS_SCHEMA).parquet(args.labels)
     report = evaluation.corpus_report(labels)
 
     rows = report.collect()  # one row per language — tiny

@@ -26,6 +26,7 @@ def reconcile(spark, stream_out: str, output: str) -> tuple[int, int]:
     `<output>/diff`; returns (label flips, flips not explained by a dup
     rule).  Raises ValueError before reading any data, see
     streaming.reconcile.scored_batches."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from engine import schema
@@ -40,14 +41,16 @@ def reconcile(spark, stream_out: str, output: str) -> tuple[int, int]:
     corrected = spark.read.schema(schema.LABELS_SCHEMA) \
         .parquet(f"{output}/labels")
     diff = rec.diff(corrected, spark.read.parquet(f"{stream_out}/labels"))
+    # counted by the write's own job: the diff is not read back
+    flips = Observation("flips")
     # diff volume scales with the cross-batch dup rate (at 10^12 clips a
     # few-% rate is 10^10 rows), so no coalesce(1) here: keep the upstream
     # (AQE-sized) partitioning — unlike the O(n_parts)-bounded lineage/
     # report writes, this table is corpus-sized in the worst case
-    diff.write.mode("overwrite").parquet(f"{output}/diff")
-
-    d = spark.read.parquet(f"{output}/diff")
-    return d.count(), d.where(~F.col("dup_related")).count()
+    (diff.observe(flips, F.count("*").alias("n"),
+                  F.count_if(~F.col("dup_related")).alias("n_bad"))
+     .write.mode("overwrite").parquet(f"{output}/diff"))
+    return flips.get["n"], flips.get["n_bad"]
 
 
 def main() -> int:

@@ -1,37 +1,82 @@
-"""Step6-graft corpus report: salted two-phase agg == unsalted == pandas."""
+"""Step6-graft corpus report: one aggregation of the label counts per
+language, cross-checked against pandas; a language with no drops reads 0
+per rule, in the report and in the eval_report job."""
 
 from __future__ import annotations
 
-from engine import config
+import pytest
+
+from engine import config, schema
 from engine.operators import evaluation, pipeline
 
 
-def test_salted_report_matches_unsalted_and_pandas(spark, clips_t1):
+@pytest.fixture(scope="module")
+def t1_labels(spark, clips_t1, tmp_path_factory):
+    """clips_t1's labels, and a labels dir of only its kept rows, both
+    written as jobs/run_pipeline.py writes labels (part_id dirs)."""
     path, _, _ = clips_t1
+    root = tmp_path_factory.mktemp("eval_labels")
     with pipeline.labeled(pipeline.read_clips(spark, path)) as labels:
-        salted = evaluation.corpus_report(labels, salted=True).toPandas()
-        plain = evaluation.corpus_report(labels, salted=False).toPandas()
-        lp = labels.toPandas()
+        labels.write.partitionBy("part_id").parquet(str(root / "all"))
+    (spark.read.schema(schema.LABELS_SCHEMA).parquet(str(root / "all"))
+     .where("keep").write.partitionBy("part_id").parquet(str(root / "kept")))
+    return str(root / "all"), str(root / "kept")
 
-    assert list(salted.columns) == list(plain.columns)
-    s = salted.drop(columns=["drop_reason_counts"]).reset_index(drop=True)
-    p = plain.drop(columns=["drop_reason_counts"]).reset_index(drop=True)
-    assert s.equals(p), "salted two-phase agg must be exact"
-    for a, b in zip(salted["drop_reason_counts"], plain["drop_reason_counts"]):
-        assert dict(a) == dict(b)
+
+def test_report_matches_pandas(spark, t1_labels):
+    labels = spark.read.schema(schema.LABELS_SCHEMA).parquet(t1_labels[0])
+    rep = evaluation.corpus_report(labels).toPandas()
+    lp = labels.toPandas()
 
     # independent pandas cross-check of the headline numbers
-    for row in salted.itertuples(index=False):
+    for row in rep.itertuples(index=False):
         grp = lp[lp["lang"] == row.lang]
+        kept = grp[grp["keep"]]
         assert row.n_total == len(grp)
         assert row.n_kept == int(grp["keep"].sum())
         assert abs(row.keep_rate - grp["keep"].mean()) < 1e-6
+        assert row.n_scrubbed == int((grp["n_scrub_hits"] > 0).sum())
+        # a language with no kept clip has no mean (NaN on both sides)
+        for got, col in ((row.avg_ppl_kept, "ppl_score"),
+                         (row.avg_silence_kept, "silence_ratio")):
+            assert got == pytest.approx(kept[col].mean(), abs=1e-4,
+                                        nan_ok=True)
         reasons = dict(row.drop_reason_counts)
         dropped = grp[~grp["keep"]]["drop_reason"].value_counts().to_dict()
         for rule in config.RULE_ORDER:
             assert reasons[rule] == dropped.get(rule, 0)
     # every label row is accounted for exactly once
-    assert salted["n_total"].sum() == len(lp)
+    assert rep["n_total"].sum() == len(lp)
+
+
+def test_report_counts_zero_for_language_without_drops(spark, t1_labels):
+    """A language with no dropped clip reads 0 per rule, never null."""
+    kept = spark.read.schema(schema.LABELS_SCHEMA).parquet(t1_labels[1])
+    rows = evaluation.corpus_report(kept).collect()
+    assert rows
+    for r in rows:
+        assert r["n_kept"] == r["n_total"] > 0
+        assert r["drop_reason_counts"] == {rule: 0
+                                           for rule in config.RULE_ORDER}
+
+
+def test_eval_report_job_over_kept_labels(spark, t1_labels, tmp_path,
+                                          monkeypatch, capsys):
+    """jobs/eval_report.py prints and writes the report of a labels dir
+    with no dropped row (its top-reasons line sorts the counts)."""
+    import jobs.eval_report as job
+    from engine import session
+
+    monkeypatch.setattr(session, "get_or_create", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # the shared session
+    out = str(tmp_path / "report")
+    monkeypatch.setattr("sys.argv", ["eval_report.py",
+                                     "--labels", t1_labels[1], "--out", out])
+    assert job.main() == 0
+    assert "top drop reasons" not in capsys.readouterr().out
+    written = spark.read.parquet(out).collect()
+    assert written and all(set(r["drop_reason_counts"].values()) == {0}
+                           for r in written)
 
 
 def test_report_by_dim_matches_pandas_and_broadcasts(spark, clips_t1):

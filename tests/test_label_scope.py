@@ -181,3 +181,23 @@ def test_one_session_builder_and_one_label_composition():
         os.path.join("engine", "streaming", "stream_pipeline.py"),
         os.path.join("jobs", "refit_thresholds.py")])
     assert job_pinners == []
+
+
+def test_one_definition_of_the_label_counts():
+    """Guard: in engine/ and jobs/ only decision.py spells a per-rule drop
+    count (`drop_reason == rule` or an `_n_<RULE>` column), so the lineage
+    rows and both corpus reports aggregate decision.label_counts; and only
+    dedup.py reads config.N_SALT (its null-checksum window), so no
+    aggregation salts a key that partial aggregation already bounds."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rule_count = re.compile(r"""["']drop_reason["']\)\s*==|\b_n_\{""")
+    salt = re.compile(r"\bconfig\.N_SALT\b")
+    counters, salters = [], []
+    for rel, text in _py_sources(root):
+        if rel.startswith(("engine" + os.sep, "jobs" + os.sep)):
+            if rule_count.search(text):
+                counters.append(rel)
+            if salt.search(text):
+                salters.append(rel)
+    assert counters == [os.path.join("engine", "operators", "decision.py")]
+    assert salters == [os.path.join("engine", "operators", "dedup.py")]

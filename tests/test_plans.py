@@ -114,17 +114,29 @@ def test_partition_pruning_on_part_id(spark, clips_t1):
     assert "DataFilters: []" in plan
 
 
-def test_salted_report_aggregates_in_two_phases(spark, clips_t1):
-    """The corpus report's salted agg must show the (lang, _salt) partial
-    key in the plan — the explicit skew-bounding phase."""
-    from engine.operators import evaluation, pipeline
+def test_report_aggregates_partially_below_one_lang_exchange(spark,
+                                                            tmp_path):
+    """The corpus report aggregates its algebraic measures in one phase:
+    Spark's partial aggregate runs map-side below the single `lang`
+    Exchange (that bounds the head language's reducer), no salt key is
+    added, and the only other Exchange is the orderBy's range partitioning.
+    """
+    import re
 
-    path, _, _ = clips_t1
-    labels = pipeline.label(
-        scoring.score_clips(pipeline.read_clips(spark, path)))
-    plan = evaluation.corpus_report(labels)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    assert "_salt" in plan
+    from engine import schema
+    from engine.operators import evaluation
+
+    path = str(tmp_path / "labels")
+    spark.createDataFrame([], schema.LABELS_SCHEMA).write.parquet(path)
+    labels = spark.read.schema(schema.LABELS_SCHEMA).parquet(path)
+    plan = _plan(evaluation.corpus_report(labels))
+    assert "_salt" not in plan
+    assert plan.count("Exchange ") == 2, plan
+    assert plan.count("Exchange hashpartitioning(lang#") == 1, plan
+    assert "Exchange rangepartitioning(lang#" in plan
+    below = plan.split("Exchange hashpartitioning(lang#", 1)[1]
+    assert re.search(r"HashAggregate\(keys=\[lang#\d+\], "
+                     r"functions=\[partial_count\(1\)", below), plan
 
 
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):

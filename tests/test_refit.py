@@ -70,6 +70,49 @@ def test_refit_is_deterministic_and_in_window(spark, clips_t1):
     assert p1["current"]["PPL_MAX"] == 90.0
 
 
+def test_refit_makes_two_spark_actions(spark, clips_t1):
+    """All three histograms come from one aggregate and both percentile
+    arrays from one select: two actions, each a shuffle-map job and a
+    result job under AQE (the scored table is already cached, so no job
+    materializes it)."""
+    from tests.test_resume import _spark_jobs
+
+    path, _, _ = clips_t1
+    scored = scoring.score_clips(pipeline.read_clips(spark, path)).persist()
+    try:
+        scored.count()
+        with _spark_jobs(spark) as jobs:
+            refit.refit_thresholds(scored)
+        assert len(jobs) == 4
+    finally:
+        scored.unpersist()
+
+
+def test_score_histograms_match_numpy_and_keep_nulls_out(spark):
+    """One aggregate gives every column's histogram: equal to numpy's over
+    the non-null values clamped into [lo, hi]; nulls fill no bin, and
+    n_rows counts every row."""
+    rng = np.random.default_rng(3)
+    n = 500
+    a = rng.normal(1.0, 2.0, n)
+    b = rng.uniform(0.0, 1.0, n)
+    rows = [(float(x), None if i % 7 == 0 else float(y))
+            for i, (x, y) in enumerate(zip(a, b))]
+    df = spark.createDataFrame(rows, "a double, b double")
+    ranges = {"a": (-1.0, 3.0), "b": (0.0, 1.0)}
+    n_rows, hists = refit.score_histograms(df, ranges, n_bins=16)
+    assert n_rows == n
+    for col, vals in (("a", a), ("b", [y for _, y in rows if y is not None])):
+        lo, hi = ranges[col]
+        centers, counts = hists[col]
+        exp, _ = np.histogram(np.clip(vals, lo, hi - 1e-12), bins=16,
+                              range=(lo, hi))
+        assert counts.tolist() == exp.tolist()
+        width = (hi - lo) / 16
+        assert np.allclose(centers, lo + (np.arange(16) + 0.5) * width)
+    assert hists["b"][1].sum() == n - len(range(0, n, 7))
+
+
 def test_approx_percentile_within_tolerance(spark):
     """The corpus-scale percentile path: percentile_approx with accuracy K
     guarantees rank error <= n/K.  The refit/quantile queries use exact
@@ -104,10 +147,11 @@ def test_percentiles_path_selection(spark):
 
     df = spark.createDataFrame([(float(i),) for i in range(1, 1002)],
                                "ppl_score double")
-    exact = refit._percentiles(df, "ppl_score", [0.5, 0.99], n_rows=1001)
-    approx = refit._percentiles(df, "ppl_score", [0.5, 0.99],
-                                n_rows=refit.EXACT_PERCENTILE_MAX_ROWS + 1)
-    forced = refit._percentiles(df, "ppl_score", [0.5, 0.99], exact=False)
+    ps = {"ppl_score": [0.5, 0.99]}
+    exact = refit._percentiles(df, ps, n_rows=1001)["ppl_score"]
+    approx = refit._percentiles(
+        df, ps, n_rows=refit.EXACT_PERCENTILE_MAX_ROWS + 1)["ppl_score"]
+    forced = refit._percentiles(df, ps, exact=False)["ppl_score"]
     assert approx == forced
     # on 1001 rows the sketch holds every value: identical ranks
     for e, a in zip(exact, approx):

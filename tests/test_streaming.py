@@ -171,8 +171,10 @@ def test_reconcile_corrects_cross_batch_dups_only(spark, clips_t1, stream_t1,
 
     path, _, _ = clips_t1
     out = str(tmp_path / "reconciled")
-    _, n_bad = rd.reconcile(spark, stream_t1, out)
+    n_flips, n_bad = rd.reconcile(spark, stream_t1, out)
     assert n_bad == 0
+    # the flips were counted as the diff was written
+    assert n_flips == spark.read.parquet(f"{out}/diff").count()
 
     # corrected == pure batch answer on keep/drop for every clip
     b = (spark.read.schema(schema.LABELS_SCHEMA).parquet(f"{out}/labels")
